@@ -58,8 +58,9 @@ def _spread(ts: list[float]) -> float:
 
 
 def _flagship(spark, n_pages: int):
-    """pages → mint → geobuf encode→decode (fused single Arrow pass) →
-    PIP join → tile assign → histogram. Returns (n_rows_out, n_features)."""
+    """pages → mint → geobuf encode→decode (fused JVM codec, inside
+    codegen) → PIP join → tile assign → histogram. Returns (n_rows_out,
+    n_features)."""
     from pyspark.sql import functions as F
 
     from geobuf_spark.codec import spark_codec
@@ -214,7 +215,7 @@ def bench_queries(spark):
 
 
 def bench_codec_vs_json(spark, n_pages: int, trials: int = 5):
-    """The reference's headline claim restated on Spark: geobuf Arrow codec
+    """The reference's headline claim restated on Spark: geobuf JVM codec
     vs JSON to_json/from_json round-trip on identical point features.
     Min of warm trials — this host has bursty co-tenants (identical runs
     vary 10-100x), so the minimum is the least-contended, reproducible
@@ -248,20 +249,10 @@ def bench_codec_vs_json(spark, n_pages: int, trials: int = 5):
         return df.agg(F.count("*"), F.sum(F.octet_length(col))).collect()[0][0]
 
     # read comparison is fused-reduce vs fused-reduce: Catalyst folds
-    # from_json into the aggregate stage (no materialization), so the
-    # geobuf side gets the same shape — decode+partial-agg in ONE Arrow
-    # pass (decode_points_agg), with the Python stage right-sized (the
-    # ~0.25 s/task dispatch floor dominates at small per-task sizes).
-    n_parts = max(8, spark.sparkContext.defaultParallelism // 4)
-
+    # from_json into the aggregate stage (no materialization), and
+    # decode_points_agg folds the decode into the aggregate the same way
     def geobuf_read():
-        return spark_codec.decode_points_agg(
-            enc_cached, parts=n_parts).collect()[0][0]
-
-    def geobuf_read_full():
-        # materializing variant (decoded columns cross the serde twice)
-        d = spark_codec.decode_points(enc_cached)
-        return d.agg(F.count("*"), F.sum("id"), F.sum("lon_q"), F.sum("lat_q")).collect()[0][0]
+        return spark_codec.decode_points_agg(enc_cached).collect()[0][0]
 
     def json_read():
         parsed = js_cached.select(
@@ -272,27 +263,13 @@ def bench_codec_vs_json(spark, n_pages: int, trials: int = 5):
         ).collect()[0][0]
 
     paths = [("geobuf_write", geobuf_write), ("json_write", json_write),
-             ("geobuf_read", geobuf_read), ("geobuf_read_full", geobuf_read_full),
-             ("json_read", json_read)]
-
-    # JVM decode path (codec/jvm): the UDF runs inside the scan stage like
-    # from_json — zero Python, no Arrow serde, no per-task dispatch floor
-    from geobuf_spark.codec import jvm_codec
-    if jvm_codec.register(spark):
-        def geobuf_read_jvm():
-            return jvm_codec.decode_points_agg_jvm(enc_cached).collect()[0][0]
-
-        def geobuf_write_jvm():
-            return enc_val(jvm_codec.encode_points_jvm(p, id_col="page_id"), "geobuf")
-        paths += [("geobuf_read_jvm", geobuf_read_jvm),
-                  ("geobuf_write_jvm", geobuf_write_jvm)]
+             ("geobuf_read", geobuf_read), ("json_read", json_read)]
 
     out, spread = _run_paths(paths, trials, n_pages)
     # size comparison (the compactness half of the reference's claim)
     out["geobuf_bytes"] = enc_cached.agg(F.sum(F.octet_length("geobuf"))).collect()[0][0]
     out["json_bytes"] = js_cached.agg(F.sum(F.octet_length("j"))).collect()[0][0]
     out["n_rows"] = n_pages
-    out.update(_py_kernel_time(enc_cached, spark_codec.decode_points_any_kernel))
     p.unpersist(); enc_cached.unpersist(); js_cached.unpersist()
     return out, spread
 
@@ -300,13 +277,13 @@ def bench_codec_vs_json(spark, n_pages: int, trials: int = 5):
 def _run_paths(paths, trials: int, expect_n: int):
     """Trial-MAJOR timing: warm every path once, then run round-robin
     rounds (A,B,…,A,B,…). Back-to-back trials let one co-tenant burst
-    poison ALL of a single path's trials (BENCH_r03's geobuf_read_jvm row
+    poison ALL of a single path's trials (BENCH_r03's JVM point-read row
     read 0.13x while the same run's lines rows won — VERDICT r3 #1);
     round-robin means a burst costs one trial of each path and the min
     survives. Returns (min-per-path, max/min spread per path)."""
     times: dict[str, list[float]] = {name: [] for name, _ in paths}
     for _, fn in paths:
-        fn()  # warmup (python workers, codegen, JIT)
+        fn()  # warmup (codegen, JIT)
     for _ in range(trials):
         for name, fn in paths:
             t0 = time.time()
@@ -338,8 +315,8 @@ def synth_lines(spark, n: int, min_v: int = 16, max_v: int = 64):
 
 def bench_lines_vs_json(spark, n_lines: int, trials: int = 5):
     """Roads-shape codec comparison (the reference's actual 18x benchmark
-    corpus is linestring roads): ~40-vertex LineStrings, geobuf Arrow
-    kernels vs to_json/from_json with array<double> coordinates."""
+    corpus is linestring roads): ~40-vertex LineStrings, geobuf JVM codec
+    vs to_json/from_json with array<double> coordinates."""
     from pyspark.sql import functions as F
 
     from geobuf_spark.codec import spark_codec
@@ -359,17 +336,8 @@ def bench_lines_vs_json(spark, n_lines: int, trials: int = 5):
         return lines.select(F.to_json(F.struct("line_id", "coords")).alias("j")) \
             .agg(F.count("*"), F.sum(F.octet_length("j"))).collect()[0][0]
 
-    # lines carry ~40x the kernel work per row of points: fewer tasks stop
-    # paying off sooner (16 parts measured best at 100k x 40 vertices)
-    n_parts = max(16, spark.sparkContext.defaultParallelism // 2)
-
     def geobuf_read():
-        return spark_codec.decode_lines_agg(enc, parts=n_parts).collect()[0][0]
-
-    def geobuf_read_full():
-        d = spark_codec.decode_lines(enc)
-        return d.agg(F.count("*"), F.sum(F.size("coords_q")),
-                     F.sum(F.element_at("coords_q", 1))).collect()[0][0]
+        return spark_codec.decode_lines_agg(enc).collect()[0][0]
 
     def json_read():
         parsed = js.select(F.from_json("j", "line_id bigint, coords array<double>").alias("s"))
@@ -388,7 +356,7 @@ def bench_lines_vs_json(spark, n_lines: int, trials: int = 5):
 
     def geobuf_scan():
         return spark_codec.decode_lines_agg(
-            spark.read.parquet(f"{tmp}/geobuf"), parts=n_parts).collect()[0][0]
+            spark.read.parquet(f"{tmp}/geobuf")).collect()[0][0]
 
     def json_scan():
         parsed = spark.read.parquet(f"{tmp}/json").select(
@@ -397,33 +365,14 @@ def bench_lines_vs_json(spark, n_lines: int, trials: int = 5):
                           F.sum(F.element_at("s.coords", 1))).collect()[0][0]
 
     paths = [("geobuf_write", geobuf_write), ("json_write", json_write),
-             ("geobuf_read", geobuf_read), ("geobuf_read_full", geobuf_read_full),
-             ("json_read", json_read),
+             ("geobuf_read", geobuf_read), ("json_read", json_read),
              ("geobuf_scan", geobuf_scan), ("json_scan", json_scan)]
-
-    from geobuf_spark.codec import jvm_codec
-    if jvm_codec.register(spark):
-        def geobuf_read_jvm():
-            return jvm_codec.decode_lines_agg_jvm(enc).collect()[0][0]
-
-        def geobuf_scan_jvm():
-            return jvm_codec.decode_lines_agg_jvm(
-                spark.read.parquet(f"{tmp}/geobuf")).collect()[0][0]
-
-        def geobuf_write_jvm():
-            return jvm_codec.encode_lines_jvm(lines) \
-                .agg(F.count("*"), F.sum(F.octet_length("geobuf"))).collect()[0][0]
-        paths += [("geobuf_read_jvm", geobuf_read_jvm),
-                  ("geobuf_scan_jvm", geobuf_scan_jvm),
-                  ("geobuf_write_jvm", geobuf_write_jvm)]
 
     try:
         out, spread = _run_paths(paths, trials, n_lines)
         out["geobuf_bytes"] = enc.agg(F.sum(F.octet_length("geobuf"))).collect()[0][0]
         out["json_bytes"] = js.agg(F.sum(F.octet_length("j"))).collect()[0][0]
         out["n_rows"] = n_lines
-        out.update(_py_kernel_time(enc, spark_codec.decode_lines_kernel,
-                                   n_sample=50_000))
         out["geobuf_parquet_bytes"] = sum(
             f.stat().st_size for f in Path(f"{tmp}/geobuf").rglob("*.parquet"))
         out["json_parquet_bytes"] = sum(
@@ -434,34 +383,12 @@ def bench_lines_vs_json(spark, n_lines: int, trials: int = 5):
         lines.unpersist(); enc.unpersist(); js.unpersist()
 
 
-def _py_kernel_time(enc, kernel, n_sample: int = 200_000, trials: int = 3):
-    """Pure-kernel batch time, no Spark dispatch: collect a bounded frame
-    sample to the driver as ONE Arrow array and time the numpy kernel on
-    it directly. This records what the Arrow path costs at batch
-    granularity; the end-to-end python read rows pay this PLUS the
-    per-task Python worker dispatch floor and two Arrow serdes — the
-    documented cause of the sub-1x python read ratios at sandbox scale
-    (VERDICT r4 #4 asked for the floor claim to be evidenced with a
-    kernel-time metric, not asserted)."""
-    import pyarrow as pa
-
-    rows = enc.select("geobuf").limit(n_sample).collect()
-    frames = pa.array((bytes(r[0]) for r in rows), type=pa.binary())
-    kernel(frames)  # warmup
-    best = 1e9
-    for _ in range(trials):
-        t0 = time.time()
-        kernel(frames)
-        best = min(best, time.time() - t0)
-    return {"py_kernel_sec": best, "py_kernel_n": len(rows)}
-
-
 def bench_many_files(spark, n_lines: int, n_files: int = 64, trials: int = 3):
     """The reference's headline concurrent read (README.md:6 — ~18x vs
     GeoJSON unmarshal on the 1 GB CA-roads corpus; geobuf_concurrent.go:
     18-63 fans file reads across goroutines): many framed .geobuf
     subfiles read and decoded in parallel. Engine path: ONE JVM plan —
-    binaryFile scan → gb_frames split → explode → gb_line_stats reduce,
+    binaryFile scan → gb_frames split → explode → decode_lines_agg,
     zero Python. Baseline: the same features as line-delimited JSON text
     files through from_json. File writes are setup, not timed (the RDD
     part-writer is bench scaffolding, not an engine path — engine file
@@ -472,10 +399,7 @@ def bench_many_files(spark, n_lines: int, n_files: int = 64, trials: int = 3):
     from pyspark.sql import functions as F
 
     from geobuf_spark.codec import core, jvm_codec, spark_codec
-    from geobuf_spark.sources import geobuf_file
 
-    if not jvm_codec.register(spark):
-        return None, None
     lines = synth_lines(spark, n_lines)
     enc = spark_codec.encode_lines(lines)
     tmp = tempfile.mkdtemp(prefix="manyfiles_")
@@ -496,17 +420,9 @@ def bench_many_files(spark, n_lines: int, n_files: int = 64, trials: int = 3):
     (lines.select(F.to_json(F.struct("line_id", "coords")).alias("value"))
      .repartition(n_files).write.mode("overwrite").text(jdir))
 
-    s = F.expr("gb_line_stats(geobuf)")
-
-    def read_jvm():
-        df = jvm_codec.read_geobuf_files_jvm(spark, gdir)
-        return df.select(s.alias("s")).agg(
-            F.count("*"), F.sum(F.element_at("s", 2)),
-            F.sum(F.element_at("s", 3))).collect()[0][0]
-
-    def read_py():
-        df = geobuf_file.read_geobuf(spark, gdir)
-        return spark_codec.decode_lines_agg(df).collect()[0][0]
+    def read_geobuf():
+        return spark_codec.decode_lines_agg(
+            jvm_codec.read_geobuf_files_jvm(spark, gdir)).collect()[0][0]
 
     def read_json():
         parsed = spark.read.text(jdir).select(F.from_json(
@@ -514,8 +430,7 @@ def bench_many_files(spark, n_lines: int, n_files: int = 64, trials: int = 3):
         return parsed.agg(F.count("*"), F.sum(F.size("s.coords")),
                           F.sum(F.element_at("s.coords", 1))).collect()[0][0]
 
-    paths = [("geobuf_read_jvm", read_jvm), ("geobuf_read_py", read_py),
-             ("json_read", read_json)]
+    paths = [("geobuf_read", read_geobuf), ("json_read", read_json)]
     try:
         out, spread = _run_paths(paths, trials, n_lines)
         out["n_files"] = n_files
@@ -550,7 +465,7 @@ def synth_polys(spark, n: int, min_v: int = 8, max_v: int = 24):
 
 def bench_polys_vs_json(spark, n_polys: int, trials: int = 3):
     """Ring-structured codec comparison (the reference's county-polygon
-    micro-bench shape): two-ring Polygons, geobuf Arrow/JVM codec vs
+    micro-bench shape): two-ring Polygons, geobuf JVM codec vs
     to_json/from_json with array coordinates + ring lengths."""
     from pyspark.sql import functions as F
 
@@ -572,9 +487,7 @@ def bench_polys_vs_json(spark, n_polys: int, trials: int = 3):
             .agg(F.count("*"), F.sum(F.octet_length("j"))).collect()[0][0]
 
     def geobuf_read():
-        d = spark_codec.decode_polygons(enc)
-        return d.agg(F.count("*"), F.sum(F.size("coords_q")),
-                     F.sum(F.element_at("coords_q", 1))).collect()[0][0]
+        return spark_codec.decode_polygons_agg(enc).collect()[0][0]
 
     def json_read():
         parsed = js.select(F.from_json(
@@ -585,24 +498,11 @@ def bench_polys_vs_json(spark, n_polys: int, trials: int = 3):
     paths = [("geobuf_write", geobuf_write), ("json_write", json_write),
              ("geobuf_read", geobuf_read), ("json_read", json_read)]
 
-    from geobuf_spark.codec import jvm_codec
-    if jvm_codec.register(spark):
-        def geobuf_read_jvm():
-            return jvm_codec.decode_polygons_agg_jvm(enc).collect()[0][0]
-
-        def geobuf_write_jvm():
-            return jvm_codec.encode_polygons_jvm(polys) \
-                .agg(F.count("*"), F.sum(F.octet_length("geobuf"))).collect()[0][0]
-        paths += [("geobuf_read_jvm", geobuf_read_jvm),
-                  ("geobuf_write_jvm", geobuf_write_jvm)]
-
     try:
         out, spread = _run_paths(paths, trials, n_polys)
         out["geobuf_bytes"] = enc.agg(F.sum(F.octet_length("geobuf"))).collect()[0][0]
         out["json_bytes"] = js.agg(F.sum(F.octet_length("j"))).collect()[0][0]
         out["n_rows"] = n_polys
-        out.update(_py_kernel_time(enc, spark_codec.decode_rings_kernel,
-                                   n_sample=100_000))
         return out, spread
     finally:
         polys.unpersist(); enc.unpersist(); js.unpersist()
@@ -617,7 +517,7 @@ def run(cores: int, scaling_only: bool = False):
     # made the output open mid-trace (round-1 "What's wrong" #4)
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        _flagship(spark, N_PAGES)  # warmup (python workers, codegen)
+        _flagship(spark, N_PAGES)  # warmup (codegen, JIT)
         ts = []
         for _ in range(5):  # min-of-5: co-tenant bursts make fewer trials lie
             t0 = time.time()
@@ -741,60 +641,32 @@ def main():
     def _nsf(sec, n):
         return round(sec / n * 1e9, 1)
 
-    # batch-granularity evidence for the python Arrow read path (VERDICT
-    # r4 #4): the numpy kernel alone vs the end-to-end rates. Where
-    # py_kernel < json_read per feature, the end-to-end python deficit is
-    # the per-task dispatch floor + Arrow serdes, which amortize with
-    # per-task batch size at scale; where it is not, the python path is
-    # honestly the compatibility tier (see BENCH/BASELINE.md).
-    kernel_rows = {
-        "py_kernel_ns_per_feature": {
-            "points": _nsf(c["py_kernel_sec"], c["py_kernel_n"]),
-            "lines": _nsf(li["py_kernel_sec"], li["py_kernel_n"]),
-            "polys": _nsf(po["py_kernel_sec"], po["py_kernel_n"]),
+    print(json.dumps({
+        "lines_read_speedup_vs_json": round(li["json_read"] / li["geobuf_read"], 2),
+        "lines_scan_speedup_vs_json": round(li["json_scan"] / li["geobuf_scan"], 2),
+        "lines_write_speedup_vs_json": round(li["json_write"] / li["geobuf_write"], 2),
+        "lines_size_ratio_vs_json": round(li["geobuf_bytes"] / li["json_bytes"], 3),
+        "lines_sec": {k: round(v, 3) for k, v in li.items() if k.endswith(("read", "write", "scan"))},
+        "polys_read_speedup_vs_json": round(po["json_read"] / po["geobuf_read"], 2),
+        "polys_write_speedup_vs_json": round(po["json_write"] / po["geobuf_write"], 2),
+        "polys_size_ratio_vs_json": round(po["geobuf_bytes"] / po["json_bytes"], 3),
+        "polys_sec": {k: round(v, 3) for k, v in po.items() if k.endswith(("read", "write"))},
+        "many_files_read_speedup_vs_json":
+            round(mf["json_read"] / mf["geobuf_read"], 2),
+        "many_files_n_files": mf["n_files"],
+        "many_files_n_rows": mf["n_rows"],
+        "many_files_sec": {k: round(v, 3) for k, v in mf.items()
+                           if k.endswith("read")},
+        "geobuf_read_ns_per_feature": {
+            "points": _nsf(c["geobuf_read"], c["n_rows"]),
+            "lines": _nsf(li["geobuf_read"], li["n_rows"]),
+            "polys": _nsf(po["geobuf_read"], po["n_rows"]),
         },
         "json_read_ns_per_feature": {
             "points": _nsf(c["json_read"], c["n_rows"]),
             "lines": _nsf(li["json_read"], li["n_rows"]),
             "polys": _nsf(po["json_read"], po["n_rows"]),
         },
-        **({"jvm_read_ns_per_feature": {
-            "points": _nsf(c["geobuf_read_jvm"], c["n_rows"]),
-            "lines": _nsf(li["geobuf_read_jvm"], li["n_rows"]),
-            "polys": _nsf(po["geobuf_read_jvm"], po["n_rows"]),
-        }} if "geobuf_read_jvm" in c else {}),
-    }
-    print(json.dumps({
-        "lines_read_speedup_vs_json": round(li["json_read"] / li["geobuf_read"], 2),
-        **({"lines_read_jvm_speedup_vs_json":
-            round(li["json_read"] / li["geobuf_read_jvm"], 2),
-            "lines_scan_jvm_speedup_vs_json":
-            round(li["json_scan"] / li["geobuf_scan_jvm"], 2),
-            "lines_write_jvm_speedup_vs_json":
-            round(li["json_write"] / li["geobuf_write_jvm"], 2)}
-           if "geobuf_read_jvm" in li else {}),
-        "lines_write_speedup_vs_json": round(li["json_write"] / li["geobuf_write"], 2),
-        "lines_size_ratio_vs_json": round(li["geobuf_bytes"] / li["json_bytes"], 3),
-        "lines_sec": {k: round(v, 3) for k, v in li.items() if k.endswith(("read", "write", "read_full", "scan", "jvm"))},
-        "polys_read_speedup_vs_json": round(po["json_read"] / po["geobuf_read"], 2),
-        **({"polys_read_jvm_speedup_vs_json":
-            round(po["json_read"] / po["geobuf_read_jvm"], 2),
-            "polys_write_jvm_speedup_vs_json":
-            round(po["json_write"] / po["geobuf_write_jvm"], 2)}
-           if "geobuf_read_jvm" in po else {}),
-        "polys_write_speedup_vs_json": round(po["json_write"] / po["geobuf_write"], 2),
-        "polys_size_ratio_vs_json": round(po["geobuf_bytes"] / po["json_bytes"], 3),
-        "polys_sec": {k: round(v, 3) for k, v in po.items() if k.endswith(("read", "write", "jvm"))},
-        **({"many_files_read_jvm_speedup_vs_json":
-            round(mf["json_read"] / mf["geobuf_read_jvm"], 2),
-            "many_files_read_py_speedup_vs_json":
-            round(mf["json_read"] / mf["geobuf_read_py"], 2),
-            "many_files_n_files": mf["n_files"],
-            "many_files_n_rows": mf["n_rows"],
-            "many_files_sec": {k: round(v, 3) for k, v in mf.items()
-                               if k.endswith(("jvm", "py", "json_read"))}}
-           if mf else {}),
-        **kernel_rows,
         "metric": "geobuf encode+PIP-join+tile-assign features/sec (flagship); per-query sec",
         "value": round(total, 3),
         "unit": "sec",
@@ -802,14 +674,9 @@ def main():
         "sf": SF_DIR,
         "features_per_sec": round(r["features_per_sec"]),
         "codec_read_speedup_vs_json": round(c["json_read"] / c["geobuf_read"], 2),
-        **({"codec_read_jvm_speedup_vs_json":
-            round(c["json_read"] / c["geobuf_read_jvm"], 2),
-            "codec_write_jvm_speedup_vs_json":
-            round(c["json_write"] / c["geobuf_write_jvm"], 2)}
-           if "geobuf_read_jvm" in c else {}),
         "codec_write_speedup_vs_json": round(c["json_write"] / c["geobuf_write"], 2),
         "codec_size_ratio_vs_json": round(c["geobuf_bytes"] / c["json_bytes"], 3),
-        "codec_sec": {k: round(v, 3) for k, v in c.items() if k.endswith(("read", "write", "read_full", "jvm"))},
+        "codec_sec": {k: round(v, 3) for k, v in c.items() if k.endswith(("read", "write"))},
         "n_flagship_features": N_PAGES,
         # noise annotations: per-row max/min trial ratio (1.0 = clean
         # window) + the loadavg observed at the gate and per query pass —
@@ -820,8 +687,7 @@ def main():
             "codec": r["codec_spread"],
             "lines": r["lines_spread"],
             "polys": r["polys_spread"],
-            **({"many_files": r["many_files_spread"]}
-               if r["many_files_spread"] else {}),
+            "many_files": r["many_files_spread"],
         },
         "load_gate": calm,
         "query_pass_loadavg": r["pass_loadavg"],

@@ -6,26 +6,25 @@ import org.apache.spark.sql.api.java.UDF3;
 import scala.collection.Seq;
 
 /**
- * JVM-side geobuf frame decode — the per-row twin of the Python Arrow
- * kernels in codec/spark_codec.py (_tokenize_geometry + point/line cores).
- *
- * Why this exists: the Arrow kernels are vectorized but pay a ~0.25 s/task
- * Python dispatch floor plus two Arrow serdes; a JVM UDF runs inside the
- * scan stage with zero Python, the same execution shape Catalyst gives
- * from_json. Compiled with the JDK javac against the pyspark-shipped jars
- * (tools/build_jvm.py) — no sbt needed.
+ * The production geobuf point, line and polygon codec as Spark Java UDFs,
+ * called through codec/spark_codec.py. A JVM UDF runs inside whole-stage
+ * codegen with zero Python, the same execution shape Catalyst gives
+ * from_json: no Python worker dispatch and no Arrow serde. Compiled with
+ * the JDK javac against the pyspark-shipped jars (tools/build_jvm.py) —
+ * no sbt needed. codec/core.py is the reference oracle the tests hold
+ * these UDFs to.
  *
  * Wire layout (write_feature.go:192-263 semantics, byte-identical to the
- * Python encoder): single-byte protobuf tags, 0x08 varint id (last wins),
+ * reference encoder): single-byte protobuf tags, 0x08 varint id (last wins),
  * 0x18 varint geometry code (first wins), 0x22 length-prefixed geometry
  * payload of zigzag varints (first wins), anything else skipped by wire
  * type (wire 2 = length-delimited jump, all others read as varint — the
  * exact rule frame_fields_walk applies).
  *
- * Error semantics mirror the Python kernels one-for-one so a corrupt frame
- * fails the task identically on either path: >63 fields, geometry payload
- * overrunning the frame, payload ending mid-varint, missing geometry/code,
- * non-point payload in Point, token count not divisible by dim in lines.
+ * A corrupt frame fails the task: >63 fields, a varint or field payload
+ * running past the frame end, payload ending mid-varint, missing
+ * geometry/code, non-point payload in Point, token count not divisible
+ * by dim in lines.
  */
 public final class GbCodec {
     private GbCodec() {}
@@ -51,6 +50,7 @@ public final class GbCodec {
                 long len = 0;
                 int shift = 0;
                 while (true) {
+                    if (p >= end) throw pastEnd();
                     int c = b[p++] & 0xFF;
                     len |= (long) (c & 0x7F) << shift;
                     shift += 7;
@@ -65,6 +65,7 @@ public final class GbCodec {
                 long v = 0;
                 int shift = 0;
                 while (true) {
+                    if (p >= end) throw pastEnd();
                     int c = b[p++] & 0xFF;
                     v |= (long) (c & 0x7F) << shift;
                     shift += 7;
@@ -100,6 +101,11 @@ public final class GbCodec {
         return f;
     }
 
+    static IllegalArgumentException pastEnd() {
+        return new IllegalArgumentException(
+            "varint running past the frame end - truncated or corrupt input");
+    }
+
     static long unzigzag(long u) {
         return (u >>> 1) ^ -(u & 1L);
     }
@@ -120,7 +126,7 @@ public final class GbCodec {
         return p;
     }
 
-    /** gb_point(geobuf) -> [id, lon_q, lat_q] (decode_points_any parity). */
+    /** gb_point(geobuf) -> [id, lon_q, lat_q]. */
     public static final class Point implements UDF1<byte[], long[]> {
         @Override
         public long[] call(byte[] b) {
@@ -155,8 +161,7 @@ public final class GbCodec {
 
     /**
      * gb_line_decode(geobuf) -> [id, x0,y0,x1,y1,...] - id followed by the
-     * absolute quantized coords (decode_lines parity; deltas cumsum'd per
-     * dimension).
+     * absolute quantized coords (deltas cumsum'd per dimension).
      */
     public static final class LineDecode implements UDF1<byte[], long[]> {
         @Override
@@ -183,14 +188,11 @@ public final class GbCodec {
 
     /**
      * gb_poly_dec(geobuf) -> [id, R, nv_1..nv_R, x0,y0,x1,y1,...] - the
-     * ring-structured decode (decode_rings_kernel parity for one frame,
-     * dim 2): R rings, each ring's vertex count, then the absolute
-     * quantized coords with the delta state RESET at each ring start
-     * (geom.go:103-111,127-157 - the first vertex of every ring is
-     * encoded absolute). Stricter than the Python batch kernel on corrupt
-     * counts: a ring token count that is zero, not divisible by dim, or
-     * overrunning the payload throws instead of bleeding into neighbor
-     * frames' token ranges.
+     * ring-structured decode: R rings, each ring's vertex count, then the
+     * absolute quantized coords with the delta state RESET at each ring
+     * start (geom.go:103-111,127-157 - the first vertex of every ring is
+     * encoded absolute). A ring token count that is zero, not divisible
+     * by dim, or overrunning the payload throws.
      */
     public static final class PolyDecode implements UDF1<byte[], long[]> {
         @Override
@@ -235,7 +237,7 @@ public final class GbCodec {
 
     /**
      * gb_poly_enc(id, coords, ring_nv) -> geobuf Polygon frame (dim 2,
-     * code 3), byte-identical to encode_rings_kernel: per ring a varint
+     * code 3), byte-identical to core.encode_feature: per ring a varint
      * nv*2 then that ring's zigzag deltas with the delta state reset at
      * the ring start (geom.go:255-273), bbox min/max over ALL the
      * feature's QUANTIZED vertices (bb.go:10-37). coords is the flat
@@ -314,8 +316,8 @@ public final class GbCodec {
     }
 
     /**
-     * gb_point_enc(id, lon, lat) -> geobuf frame, byte-identical to the
-     * Arrow kernel encode_points_kernel (write_feature.go:192-263 layout:
+     * gb_point_enc(id, lon, lat) -> geobuf frame, byte-identical to
+     * core.encode_feature (write_feature.go:192-263 layout:
      * 0x08 id | 0x18 code=1 | 0x22 zigzag varint x,y | 0x2A degenerate
      * bbox x,y,x,y). Quantize is (long)(c * 1e7) - Go/numpy truncation
      * toward zero (geom.go:173-179).
@@ -347,7 +349,7 @@ public final class GbCodec {
 
     /**
      * gb_line_enc(id, coords) -> geobuf LineString frame (dim 2, code 2),
-     * byte-identical to encode_lines_kernel: per-vertex deltas zigzag
+     * byte-identical to core.encode_feature: per-vertex deltas zigzag
      * varint packed (geom.go:204-246), bbox min/max over the QUANTIZED
      * lattice (bb.go:10-37). coords is the flat interleaved x,y array.
      */

@@ -1,20 +1,22 @@
-"""JVM-side frame decode — registration and DataFrame wrappers.
+"""JVM codec — jar loading and UDF registration.
 
-The Arrow kernels in spark_codec.py are the portable path; this module
-loads the compiled twin (jvm/GbCodec.java, built by tools/build_jvm.py
-with the JDK against pyspark's own jars) and exposes the same fused
-decode→reduce shapes with ZERO Python in the plan: the UDF runs inside
-the scan stage like from_json, so the ~0.25 s/task Python dispatch floor
-and both Arrow serdes disappear. Callers must treat availability as
-optional (`register(spark)` returns False when the jar is absent and no
-JDK can build it) and fall back to the Arrow kernels.
+codec/jvm/GbCodec.java holds the production point, line and polygon codec
+as Spark Java UDFs. `register` adds the jar (committed, rebuilt from the
+source by tools/build_jvm.py when a JDK is present) and registers the
+gb_* functions on a session; the DataFrame functions in spark_codec call
+it before building their expressions. The UDFs run inside whole-stage
+codegen like from_json: no Python worker, no Arrow serde. Registration
+failures raise.
 """
 from __future__ import annotations
+
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+_JAR = Path(__file__).parent / "jvm" / "gb-codec.jar"
 _UDFS = {
     "gb_point": "geobufspark.GbCodec$Point",
     "gb_line_stats": "geobufspark.GbCodec$LineStats",
@@ -28,135 +30,39 @@ _ENC_UDFS = {
 }
 # file-stream splitter (array<binary> return type, registered separately)
 _FRAMES_UDF = ("gb_frames", "geobufspark.GbCodec$Frames")
+
+
 def register(spark: SparkSession) -> bool:
-    """ADD JAR + register the decode and encode UDFs. Idempotent per
-    session; False (never raises) when neither a prebuilt jar nor a JDK
-    exists."""
+    """ADD JAR + register the decode and encode UDFs; idempotent per
+    session. Returns True. Raises RuntimeError when there is neither a
+    prebuilt jar nor a JDK to build one; a failed build, ADD JAR or
+    registration propagates its own error."""
     # registerJavaFunction is per-session (session catalog), so idempotence
     # is probed from the catalog itself: an applicationId key would skip
     # registration for a second session (spark.newSession()) in the same
     # app, and an id(spark) key can alias a GC'd session's address.
     # probe the NEWEST udf name: a session registered before the frame
     # splitter landed then re-registers the full set instead of reporting done
-    try:
-        if spark.catalog.functionExists("gb_frames"):
-            return True
-    except Exception:
-        pass
+    if spark.catalog.functionExists("gb_frames"):
+        return True
     try:
         from tools.build_jvm import build
     except ImportError:  # repo tools not importable (installed package)
-        from pathlib import Path
-        jar = Path(__file__).parent / "jvm" / "gb-codec.jar"
-        build = (lambda j=jar: j if j.exists() else None)
-    try:
-        jar = build()
-        if jar is None:
-            return False
-        spark.sql(f"ADD JAR '{jar.resolve().as_uri()}'")
-        arr = T.ArrayType(T.LongType())
-        for name, cls in _UDFS.items():
-            spark.udf.registerJavaFunction(name, cls, arr)
-        for name, cls in _ENC_UDFS.items():
-            spark.udf.registerJavaFunction(name, cls, T.BinaryType())
-        spark.udf.registerJavaFunction(
-            _FRAMES_UDF[0], _FRAMES_UDF[1], T.ArrayType(T.BinaryType()))
-    except Exception:
-        return False
+        build = (lambda: _JAR if _JAR.exists() else None)
+    jar = build()
+    if jar is None:
+        raise RuntimeError(
+            f"JVM codec unavailable: no prebuilt jar at {_JAR} and no JDK "
+            "(javac) to build it with tools/build_jvm.py")
+    spark.sql(f"ADD JAR '{jar.resolve().as_uri()}'")
+    arr = T.ArrayType(T.LongType())
+    for name, cls in _UDFS.items():
+        spark.udf.registerJavaFunction(name, cls, arr)
+    for name, cls in _ENC_UDFS.items():
+        spark.udf.registerJavaFunction(name, cls, T.BinaryType())
+    spark.udf.registerJavaFunction(
+        _FRAMES_UDF[0], _FRAMES_UDF[1], T.ArrayType(T.BinaryType()))
     return True
-
-
-def decode_points_agg_jvm(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
-    """Fused decode→reduce for point frames, JVM-only plan: gb_point runs
-    per row inside the scan stage; the aggregate folds in the same
-    whole-stage pipeline. Output schema identical to
-    spark_codec.decode_points_agg (n, sum_id, sum_lon_q, sum_lat_q)."""
-    p = F.expr(f"gb_point({bin_col})")
-    return df.select(p.alias("p")).agg(
-        F.count("*").alias("n"),
-        F.sum(F.element_at("p", 1)).alias("sum_id"),
-        F.sum(F.element_at("p", 2)).alias("sum_lon_q"),
-        F.sum(F.element_at("p", 3)).alias("sum_lat_q"),
-    )
-
-
-def decode_lines_agg_jvm(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
-    """Fused decode→reduce for line frames (JVM plan). Output schema
-    identical to spark_codec.decode_lines_agg (n, sum_size, sum_first_x)."""
-    s = F.expr(f"gb_line_stats({bin_col})")
-    return df.select(s.alias("s")).agg(
-        F.count("*").alias("n"),
-        F.sum(F.element_at("s", 2)).alias("sum_size"),
-        F.sum(F.element_at("s", 3)).alias("sum_first_x"),
-    )
-
-
-def decode_points_jvm(df: DataFrame, bin_col: str = "geobuf",
-                      id_col: str = "id") -> DataFrame:
-    """Materializing point decode → (id, lon_q, lat_q), JVM plan
-    (decode_points_any parity)."""
-    p = F.expr(f"gb_point({bin_col})")
-    return df.select(p.alias("p")).select(
-        F.element_at("p", 1).alias(id_col),
-        F.element_at("p", 2).alias("lon_q"),
-        F.element_at("p", 3).alias("lat_q"),
-    )
-
-
-def decode_lines_jvm(df: DataFrame, bin_col: str = "geobuf",
-                     id_col: str = "line_id") -> DataFrame:
-    """Materializing line decode → (id, coords_q), JVM plan
-    (decode_lines parity; coords_q is the absolute quantized flat array)."""
-    a = F.expr(f"gb_line_decode({bin_col})")
-    return df.select(a.alias("a")).select(
-        F.element_at("a", 1).alias(id_col),
-        F.slice("a", 2, F.greatest(F.size("a") - 1, F.lit(0))).alias("coords_q"),
-    )
-
-
-def decode_polygons_jvm(df: DataFrame, bin_col: str = "geobuf",
-                        id_col: str = "poly_id") -> DataFrame:
-    """Materializing ring-structured decode → (id, ring_nv, coords_q), JVM
-    plan (decode_rings_kernel parity, dim 2): ring_nv is the per-ring
-    vertex counts, coords_q the absolute quantized flat array with the
-    delta state reset at each ring."""
-    a = F.expr(f"gb_poly_dec({bin_col})")
-    nr = F.element_at("a", 2).cast("int")
-    return df.select(a.alias("a")).select(
-        F.element_at("a", 1).alias(id_col),
-        F.slice(
-            "a", nr + 3,
-            F.greatest(F.size("a") - nr - 2, F.lit(0)),
-        ).alias("coords_q"),
-        F.slice("a", 3, nr).cast("array<int>").alias("ring_lens"),
-    )
-
-
-def decode_polygons_agg_jvm(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
-    """Fused decode→reduce for ring frames (JVM plan): per-frame the decode
-    emits [id, R, nv…, coords…]; the aggregate folds counts in the same
-    whole-stage pipeline — the polygon twin of decode_lines_agg_jvm."""
-    a = F.expr(f"gb_poly_dec({bin_col})")
-    return df.select(a.alias("a")).agg(
-        F.count("*").alias("n"),
-        F.sum(F.element_at("a", 1)).alias("sum_id"),
-        F.sum(F.element_at("a", 2)).alias("sum_rings"),
-        F.sum(F.size("a") - F.element_at("a", 2) - 2).alias("sum_coord_tokens"),
-    )
-
-
-def roundtrip_points_jvm(df: DataFrame, id_col: str = "doc_id",
-                         lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """Fused encode→decode entirely inside whole-stage codegen:
-    gb_point(gb_point_enc(...)) — the JVM twin of
-    spark_codec.roundtrip_points (same proof of the wire format, zero
-    Python and zero Arrow serde). Frames are byte-identical between the
-    two paths (pytest-pinned), so the quantized outputs agree exactly."""
-    p = F.expr(f"gb_point(gb_point_enc({id_col}, {lon}, {lat}))")
-    return df.select(p.alias("p")).select(
-        F.element_at("p", 1).alias(id_col),
-        F.element_at("p", 2).alias("lon_q"),
-        F.element_at("p", 3).alias("lat_q"))
 
 
 def read_geobuf_files_jvm(spark: SparkSession, path: str,
@@ -169,36 +75,8 @@ def read_geobuf_files_jvm(spark: SparkSession, path: str,
     file). Python twin: sources.geobuf_file.read_geobuf (mapInArrow).
     Mid-file metadata dummies don't occur in subfile layouts
     (read_frames skip_metadata=False contract)."""
+    register(spark)
     files = spark.read.format("binaryFile").load(path)
     return (files.select(
         F.col("path"),
         F.explode(F.expr("gb_frames(content)")).alias(bin_col)))
-
-
-def encode_points_jvm(df: DataFrame, id_col: str = "doc_id", lon: str = "lon",
-                      lat: str = "lat", out: str = "geobuf") -> DataFrame:
-    """(id, lon, lat) → (id, geobuf), JVM plan — byte-identical frames to
-    spark_codec.encode_points with zero Python in the stage."""
-    return df.select(
-        F.col(id_col),
-        F.expr(f"gb_point_enc({id_col}, {lon}, {lat})").alias(out))
-
-
-def encode_lines_jvm(df: DataFrame, id_col: str = "line_id",
-                     coords: str = "coords", out: str = "geobuf") -> DataFrame:
-    """(id, coords flat array<double>) → (id, geobuf), JVM plan
-    (spark_codec.encode_lines parity, dim 2)."""
-    return df.select(
-        F.col(id_col),
-        F.expr(f"gb_line_enc({id_col}, {coords})").alias(out))
-
-
-def encode_polygons_jvm(df: DataFrame, id_col: str = "poly_id",
-                        coords: str = "coords", ring_lens: str = "ring_lens",
-                        out: str = "geobuf") -> DataFrame:
-    """(id, coords flat array<double>, ring_lens array<int>) → (id, geobuf),
-    JVM plan — byte-identical Polygon frames to spark_codec.encode_polygons
-    (geom_type 3, dim 2)."""
-    return df.select(
-        F.col(id_col),
-        F.expr(f"gb_poly_enc({id_col}, {coords}, {ring_lens})").alias(out))

@@ -1,18 +1,18 @@
-"""Vectorized geobuf codec over Spark DataFrames — Arrow batches in, numpy
-kernels inside, zero per-row Python on the hot path.
+"""Geobuf codec over Spark DataFrames.
 
-Hot path (the 10^12-page workload): point features with an integer id.
-A point frame is [0x08 id] [0x18 code] [0x22 len zz(x) zz(y)]
-[0x2A len zz(x) zz(y) zz(x) zz(y)] — *every token is a varint*, so:
+The point, line and polygon functions (`encode_points`, `decode_points`,
+`decode_points_agg`, `roundtrip_points`, `encode_lines`, `decode_lines`,
+`decode_lines_agg`, `encode_polygons`, `decode_polygons`,
+`decode_polygons_agg`) are the one production codec: each is a column
+expression over the JVM UDFs of codec/jvm/GbCodec.java, so it runs inside
+whole-stage codegen with no Python worker and no Arrow serde.
+codec/core.py is the per-feature reference oracle the tests hold them to.
 
-- encode: per-row varint byte matrices + cumsum offsets + one scatter into
-  a single buffer, wrapped zero-copy into an Arrow BinaryArray;
-- decode: one `unpack_varints` pass over the concatenated frames yields a
-  flat token stream with exactly 14 tokens per frame → reshape (N, 14).
-
-Generic geometries/properties go through the per-feature core codec inside
-mapInPandas — the import/export edge (ConvertGeojson/ConvertGeobuf analog,
-convert_geojson.go:153-193), not the hot path.
+The Arrow/numpy code below covers what has no JVM twin: the generic
+import/export edge (any geometry type and dimension, with properties —
+ConvertGeojson/ConvertGeobuf analog, convert_geojson.go:153-193),
+fixed-schema property tables, lazy property reads, and the key and bbox
+walks over raw frames.
 """
 
 from __future__ import annotations
@@ -20,24 +20,151 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from geobuf_spark.codec import core
+from geobuf_spark.codec import core, jvm_codec
+
+
+# ---------------------------------------------------------------------------
+# point / line / polygon codec — column expressions over the JVM UDFs
+# (codec/jvm/GbCodec.java), evaluated inside whole-stage codegen
+# ---------------------------------------------------------------------------
+
+def _udf(df: DataFrame, name: str, *cols) -> Column:
+    """`name(cols…)` over the gb_* JVM UDFs, registered on df's session."""
+    jvm_codec.register(df.sparkSession)
+    return F.call_udf(name, *cols)
+
+
+def _f64(c: str) -> Column:
+    return F.col(c).cast("double")
+
+
+def _long(c: str) -> Column:
+    return F.col(c).cast("long")
+
+
+def _coords(c: str) -> Column:
+    return F.col(c).cast("array<double>")
+
+
+def encode_points(df: DataFrame, id_col: str = "doc_id", lon: str = "lon",
+                  lat: str = "lat", out: str = "geobuf") -> DataFrame:
+    """(id, lon, lat) → (id, geobuf) Point frames (write_feature.go:192-263
+    layout with the degenerate bbox). A null id/lon/lat fails the task:
+    the wire format has no null encoding, so filter before encoding."""
+    enc = _udf(df, "gb_point_enc", _long(id_col), _f64(lon), _f64(lat))
+    return df.select(_long(id_col).alias(id_col), enc.alias(out))
+
+
+def _point_columns(p: Column, id_col: str) -> list:
+    return [F.element_at(p, 1).alias(id_col),
+            F.element_at(p, 2).alias("lon_q"),
+            F.element_at(p, 3).alias("lat_q")]
+
+
+def decode_points(df: DataFrame, bin_col: str = "geobuf",
+                  id_col: str = "id") -> DataFrame:
+    """Point frames → (id, lon_q, lat_q), exact int64 on the 1e-7 lattice.
+    Frames may carry properties, lack a bbox, or order fields freely (the
+    reference decoder's field walk, read_feature.go:9-100)."""
+    p = _udf(df, "gb_point", F.col(bin_col))
+    return df.select(p.alias("p")).select(*_point_columns(F.col("p"), id_col))
+
+
+def roundtrip_points(df: DataFrame, id_col: str = "doc_id", lon: str = "lon",
+                     lat: str = "lat") -> DataFrame:
+    """Fused encode→decode, gb_point(gb_point_enc(…)): proves the wire
+    format on every row → (id, lon_q, lat_q)."""
+    enc = _udf(df, "gb_point_enc", _long(id_col), _f64(lon), _f64(lat))
+    p = F.call_udf("gb_point", enc)
+    return df.select(p.alias("p")).select(*_point_columns(F.col("p"), id_col))
+
+
+def decode_points_agg(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
+    """Fused decode→reduce for point frames → one row (n, sum_id,
+    sum_lon_q, sum_lat_q): the decode folds into the aggregate's pipeline,
+    so the decoded columns are never materialized (the ReadBoundingBox /
+    LazyFeature shape, reader.go:145-166)."""
+    p = F.col("p")
+    return df.select(_udf(df, "gb_point", F.col(bin_col)).alias("p")).agg(
+        F.count("*").alias("n"),
+        F.sum(F.element_at(p, 1)).alias("sum_id"),
+        F.sum(F.element_at(p, 2)).alias("sum_lon_q"),
+        F.sum(F.element_at(p, 3)).alias("sum_lat_q"))
+
+
+def encode_lines(df: DataFrame, id_col: str = "line_id", coords: str = "coords",
+                 out: str = "geobuf") -> DataFrame:
+    """(id, coords flat x,y array<double>) → (id, geobuf) LineString frames
+    (writeline deltas, geom.go:204-246; bbox over the quantized lattice).
+    Vertices of other widths, MultiPoint and MultiLineString go through
+    encode_features_generic."""
+    enc = _udf(df, "gb_line_enc", _long(id_col), _coords(coords))
+    return df.select(_long(id_col).alias(id_col), enc.alias(out))
+
+
+def decode_lines(df: DataFrame, bin_col: str = "geobuf",
+                 id_col: str = "line_id") -> DataFrame:
+    """LineString frames → (id, coords_q flat array<bigint>), exact ints;
+    the vertex width comes from each frame's geometry code."""
+    a = F.col("a")
+    return df.select(_udf(df, "gb_line_decode", F.col(bin_col)).alias("a")).select(
+        F.element_at(a, 1).alias(id_col),
+        F.slice(a, 2, F.greatest(F.size(a) - 1, F.lit(0))).alias("coords_q"))
+
+
+def decode_lines_agg(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
+    """Fused decode→reduce for line frames → one row (n, sum_size,
+    sum_first_x): Σ size(coords_q) and Σ first x, the roads-scan shape."""
+    s = F.col("s")
+    return df.select(_udf(df, "gb_line_stats", F.col(bin_col)).alias("s")).agg(
+        F.count("*").alias("n"),
+        F.sum(F.element_at(s, 2)).alias("sum_size"),
+        F.sum(F.element_at(s, 3)).alias("sum_first_x"))
+
+
+def encode_polygons(df: DataFrame, id_col: str = "poly_id", coords: str = "coords",
+                    ring_lens: str = "ring_lens", out: str = "geobuf") -> DataFrame:
+    """(id, coords flat x,y array<double>, ring_lens array<int>) → (id,
+    geobuf) Polygon frames: per ring varint(nv·2) then its deltas, the
+    delta state reset at each ring (geom.go:255-273)."""
+    enc = _udf(df, "gb_poly_enc", _long(id_col), _coords(coords), F.col(ring_lens))
+    return df.select(_long(id_col).alias(id_col), enc.alias(out))
+
+
+def decode_polygons(df: DataFrame, bin_col: str = "geobuf",
+                    id_col: str = "poly_id") -> DataFrame:
+    """Ring frames → (id, coords_q flat array<bigint>, ring_lens
+    array<int>). The UDF emits [id, R, nv_1…nv_R, coords…]."""
+    a = F.col("a")
+    nr = F.element_at(a, 2).cast("int")
+    return df.select(_udf(df, "gb_poly_dec", F.col(bin_col)).alias("a")).select(
+        F.element_at(a, 1).alias(id_col),
+        F.slice(a, nr + 3, F.greatest(F.size(a) - nr - 2, F.lit(0))).alias("coords_q"),
+        F.slice(a, 3, nr).cast("array<int>").alias("ring_lens"))
+
+
+def decode_polygons_agg(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
+    """Fused decode→reduce for ring frames → one row (n, sum_id,
+    sum_rings, sum_coord_tokens)."""
+    a = F.col("a")
+    return df.select(_udf(df, "gb_poly_dec", F.col(bin_col)).alias("a")).agg(
+        F.count("*").alias("n"),
+        F.sum(F.element_at(a, 1)).alias("sum_id"),
+        F.sum(F.element_at(a, 2)).alias("sum_rings"),
+        F.sum(F.size(a) - F.element_at(a, 2) - 2).alias("sum_coord_tokens"))
+
 
 # ---------------------------------------------------------------------------
 # numpy batch kernels (testable without Spark)
 # ---------------------------------------------------------------------------
 
-_POINT_TOKENS = 14  # 8,id,24,code,34,glen,gx,gy,42,blen,bx,by0,bx1,by1
-
-
-
 class _FrameWriter:
-    """Shared scatter helpers for the batch encode kernels: a per-row write
-    cursor over one contiguous output buffer. One implementation — the
-    kernels previously each carried a verbatim copy, and fixes drifted."""
+    """Scatter helper for the batch encode kernels: a per-row write cursor
+    over one contiguous output buffer."""
 
     def __init__(self, buf: np.ndarray, pos: np.ndarray):
         self.buf = buf
@@ -53,48 +180,14 @@ class _FrameWriter:
             self.buf[self.pos[sel] + j] = mat[sel, j]
         self.pos = self.pos + lens
 
-    def segmented(self, mat, lens, seg_starts, seg_counts, seg_bytes):
-        """Scatter a variable count of varints per row: flat byte positions
-        via cumsum arithmetic (rows advance by their own byte totals)."""
-        tok_off = np.zeros(len(lens) + 1, dtype=np.int64)
-        np.cumsum(lens, out=tok_off[1:])
-        row_of_tok = np.repeat(np.arange(len(seg_starts)), seg_counts)
-        base = self.pos[row_of_tok] + (tok_off[:-1] - tok_off[seg_starts][row_of_tok])
-        for j in range(mat.shape[1]):
-            sel = lens > j
-            self.buf[base[sel] + j] = mat[sel, j]
-        self.pos = self.pos + seg_bytes
-
-
-def _tokenize_frames(frames: pa.Array):
-    """Shared decode prologue: concatenated frame buffer → (n, flat bytes,
-    all varint tokens, first-token index per frame, tokens per frame)."""
-    combined = pa.concat_arrays([frames.cast(pa.binary())])
-    n = len(combined)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return 0, np.empty(0, np.uint8), np.empty(0, np.uint64), e, e
-    flat = np.frombuffer(combined.buffers()[2], dtype=np.uint8)
-    offs = np.frombuffer(combined.buffers()[1], dtype=np.int32)
-    start, end = int(offs[combined.offset]), int(offs[combined.offset + n])
-    seg = flat[start:end]
-    tok_ends = np.flatnonzero(seg < 0x80)
-    tok_starts_b = np.concatenate(([0], tok_ends[:-1] + 1))
-    frame_off = offs[combined.offset : combined.offset + n + 1].astype(np.int64) - start
-    counts = np.diff(np.searchsorted(tok_starts_b, frame_off))
-    tokens = core.unpack_varints(seg, 0, len(seg))
-    first = np.zeros(n, dtype=np.int64)
-    np.cumsum(counts[:-1], out=first[1:])
-    return n, seg, tokens, first, counts
-
 
 def _tokenize_geometry(frames: pa.Array, allow_missing: bool = False):
     """Payload-level decode prologue: field-walk every frame for the id
     (tag 0x08), geom code (tag 0x18) and geometry payload (tag 0x22),
     gather the payload byte ranges contiguously, and varint-tokenize ONLY
-    those bytes. Unlike `_tokenize_frames`, this tolerates properties,
-    missing bbox, and any field order — the same per-field walk the
-    reference decoder does (read_feature.go:9-100), batched.
+    those bytes. This tolerates properties, missing bbox, and any field
+    order — the same per-field walk the reference decoder does
+    (read_feature.go:9-100), batched.
 
     Returns (n, ids, codes, tokens, first, counts) where tokens are the
     geometry deltas/headers only and first/counts index them per frame.
@@ -196,308 +289,6 @@ def _varint_matrix(v: np.ndarray):
     return (groups | cont.astype(np.uint64)).astype(np.uint8), lens
 
 
-def encode_points_kernel(ids: np.ndarray, lon: np.ndarray, lat: np.ndarray) -> pa.Array:
-    """Encode N point features → Arrow binary array of geobuf frames.
-
-    Wire layout per WriteFeature (write_feature.go:192-263) with geometry
-    per writepointbs (geom.go:187-201) and bbox (write_feature.go:249-260,
-    degenerate [x,y,x,y] for a point, bb.go:90-95)."""
-    n = len(ids)
-    qx = core.quantize_vec(lon)
-    qy = core.quantize_vec(lat)
-    zx = core.zigzag_vec(qx)
-    zy = core.zigzag_vec(qy)
-    zid = ids.astype(np.uint64)
-
-    mid, lid = _varint_matrix(zid)
-    mx, lx = _varint_matrix(zx)
-    my, ly = _varint_matrix(zy)
-    glen = lx + ly
-    blen = 2 * glen
-    mgl, lgl = _varint_matrix(glen.astype(np.uint64))
-    mbl, lbl = _varint_matrix(blen.astype(np.uint64))
-
-    # per-row frame length
-    total = 1 + lid + 2 + 1 + lgl + glen + 1 + lbl + blen
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(total, out=offsets[1:])
-    buf = np.empty(offsets[-1], dtype=np.uint8)
-
-    w = _FrameWriter(buf, offsets[:-1])
-    put_const, put_mat = w.const, w.mat
-
-    put_const(8)
-    put_mat(mid, lid)
-    put_const(24)
-    put_const(1)  # geom code Point, dim 2
-    put_const(34)
-    put_mat(mgl, lgl)
-    put_mat(mx, lx)
-    put_mat(my, ly)
-    put_const(42)
-    put_mat(mbl, lbl)
-    put_mat(mx, lx)
-    put_mat(my, ly)
-    put_mat(mx, lx)
-    put_mat(my, ly)
-    assert np.array_equal(w.pos, offsets[1:])
-
-    return pa.BinaryArray.from_buffers(
-        pa.binary(), n,
-        [None, pa.py_buffer(offsets.astype(np.int32).tobytes()), pa.py_buffer(buf.tobytes())],
-    )
-
-
-def decode_points_kernel(frames: pa.Array):
-    """Decode N point frames → (id uint64, qx int64, qy int64) — one varint
-    sweep over the concatenated buffer, reshape to 14 tokens/frame."""
-    combined = pa.concat_arrays([frames.cast(pa.binary())])
-    flat = np.frombuffer(combined.buffers()[2], dtype=np.uint8) if combined.buffers()[2] else np.empty(0, np.uint8)
-    offs = np.frombuffer(combined.buffers()[1], dtype=np.int32)
-    start, end = int(offs[combined.offset]), int(offs[combined.offset + len(combined)])
-    tokens = core.unpack_varints(flat, start, end)
-    n = len(combined)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e.astype(np.uint64), e, e
-    tok = tokens.reshape(n, _POINT_TOKENS)
-    # sanity: tags where expected
-    assert int(tok[0, 0]) == 8 and int(tok[0, 2]) == 24 and int(tok[0, 4]) == 34
-    ids = tok[:, 1]
-    qx = core.unzigzag_vec(tok[:, 6])
-    qy = core.unzigzag_vec(tok[:, 7])
-    return ids, qx, qy
-
-
-# ---------------------------------------------------------------------------
-# DataFrame-level API
-# ---------------------------------------------------------------------------
-
-def encode_points(df: DataFrame, id_col: str = "doc_id", lon: str = "lon",
-                  lat: str = "lat", out: str = "geobuf") -> DataFrame:
-    """(id, lon, lat) → (id, geobuf) via mapInArrow — Arrow RecordBatch in,
-    numpy kernel, Arrow out; no pandas materialization anywhere."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField(out, T.BinaryType()),
-    ])
-
-    def _enc(batches):
-        for batch in batches:
-            for ci in range(3):
-                if batch.column(ci).null_count:
-                    raise ValueError(
-                        "encode_points: null id/lon/lat (nulls become NaN "
-                        "→ INT64_MIN garbage); filter before encoding")
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            lons = batch.column(1).to_numpy(zero_copy_only=False)
-            lats = batch.column(2).to_numpy(zero_copy_only=False)
-            frames = encode_points_kernel(
-                ids.astype(np.int64), lons.astype(np.float64), lats.astype(np.float64)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()), frames], names=[id_col, out]
-            )
-
-    return df.select(id_col, lon, lat).mapInArrow(_enc, schema)
-
-
-def decode_points(df: DataFrame, bin_col: str = "geobuf", id_col: str = "id",
-                  quantized: bool = True) -> DataFrame:
-    """Decode point frames → columns (id, lon_q, lat_q) or float lon/lat.
-
-    The quantized int64 path is exact (lossless on the 1e-7 lattice); the
-    float path applies the reference's go_round7 decode semantics. Arrow
-    binary buffers are read in place — no per-row conversion."""
-    fields = [
-        T.StructField(id_col, T.LongType()),
-        T.StructField("lon_q", T.LongType()),
-        T.StructField("lat_q", T.LongType()),
-    ]
-    if not quantized:
-        fields += [T.StructField("lon", T.DoubleType()), T.StructField("lat", T.DoubleType())]
-    schema = T.StructType(fields)
-    names = [f.name for f in fields]
-
-    def _dec(batches):
-        for batch in batches:
-            frames = batch.column(batch.schema.get_field_index(bin_col))
-            # payload field-walk kernel: ~2-4x faster than tokenizing the
-            # whole frame (2 payload varints/frame vs 14), and tolerant of
-            # props / missing bbox
-            ids, qx, qy = decode_points_any_kernel(frames)
-            arrays = [
-                pa.array(ids.astype(np.int64), type=pa.int64()),
-                pa.array(qx, type=pa.int64()),
-                pa.array(qy, type=pa.int64()),
-            ]
-            if not quantized:
-                arrays.append(pa.array(core.go_round7(qx.astype(np.float64) / core.POWER)))
-                arrays.append(pa.array(core.go_round7(qy.astype(np.float64) / core.POWER)))
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return df.select(bin_col).mapInArrow(_dec, schema)
-
-
-def decode_points_agg(df: DataFrame, bin_col: str = "geobuf",
-                      parts: int | None = None) -> DataFrame:
-    """Fused decode→reduce for point frames: one Arrow pass emits per-batch
-    PARTIAL sums (count, Σid, Σlon_q, Σlat_q); the JVM folds the partials.
-
-    This is the engine's lazy-read shape (ReadBoundingBox / LazyFeature
-    semantics, reader.go:145-166): when a query reduces over decoded
-    values, materializing the decoded columns through a second Arrow serde
-    is pure overhead — the same reason Catalyst fuses from_json into the
-    aggregate stage. `parts` right-sizes the Python stage: per-task
-    dispatch costs ~0.2-0.3 s wall, so many tiny tasks lose to few big
-    ones until the kernel work dominates (batch-size tuning, TODO r01)."""
-    src = df.select(bin_col)
-    if parts:
-        src = src.coalesce(parts)
-    schema = T.StructType([
-        T.StructField("n", T.LongType()),
-        T.StructField("sum_id", T.LongType()),
-        T.StructField("sum_lon_q", T.LongType()),
-        T.StructField("sum_lat_q", T.LongType()),
-    ])
-
-    def _da(batches):
-        c = si = sx = sy = 0
-        for b in batches:
-            ids, qx, qy = decode_points_any_kernel(b.column(0))
-            c += len(ids)
-            si += int(ids.sum())
-            sx += int(qx.sum())
-            sy += int(qy.sum())
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([v], type=pa.int64()) for v in (c, si, sx, sy)],
-            names=["n", "sum_id", "sum_lon_q", "sum_lat_q"])
-
-    partials = src.mapInArrow(_da, schema)
-    return partials.agg(
-        F.sum("n").alias("n"), F.sum("sum_id").alias("sum_id"),
-        F.sum("sum_lon_q").alias("sum_lon_q"),
-        F.sum("sum_lat_q").alias("sum_lat_q"))
-
-
-def decode_lines_agg(df: DataFrame, bin_col: str = "geobuf",
-                     parts: int | None = None) -> DataFrame:
-    """Fused decode→reduce for line frames: per-batch partials of
-    (count, Σ size(coords_q), Σ first-x) — the roads-scan reduce shape —
-    folded JVM-side. Same rationale as `decode_points_agg`."""
-    src = df.select(bin_col)
-    if parts:
-        src = src.coalesce(parts)
-    schema = T.StructType([
-        T.StructField("n", T.LongType()),
-        T.StructField("sum_size", T.LongType()),
-        T.StructField("sum_first_x", T.LongType()),
-    ])
-
-    def _da(batches):
-        c = sz = fx = 0
-        for b in batches:
-            ids, coords, nv = decode_lines_kernel(b.column(0))
-            if not len(ids):
-                continue
-            c += len(ids)
-            sz += 2 * int(nv.sum())
-            starts = np.zeros(len(nv), dtype=np.int64)
-            np.cumsum(nv[:-1] * 2, out=starts[1:])
-            fx += int(coords[starts].sum())
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([v], type=pa.int64()) for v in (c, sz, fx)],
-            names=["n", "sum_size", "sum_first_x"])
-
-    partials = src.mapInArrow(_da, schema)
-    return partials.agg(
-        F.sum("n").alias("n"), F.sum("sum_size").alias("sum_size"),
-        F.sum("sum_first_x").alias("sum_first_x"))
-
-
-# ---------------------------------------------------------------------------
-# LineString batch kernels — the reference's roads workload, fully vectorized
-# (segmented deltas across a flattened batch; no per-row Python)
-# ---------------------------------------------------------------------------
-
-def encode_lines_kernel(ids: np.ndarray, coords: np.ndarray, nv: np.ndarray,
-                        dim: int = 2, geom_type: int = 2) -> pa.Array:
-    """Encode N LineString/MultiPoint features → Arrow binary frames.
-
-    coords: flat float64 interleaved (x0,y0[,z0,…],x1,y1,…) across the
-    whole batch; nv: vertices per feature; dim 2–15 (homogeneous per
-    batch). MultiPoint (geom_type=4) shares LineString's exact wire shape
-    (packed deltas, geom.go:249-252). Wire layout per WriteFeature with
-    writeline delta semantics (geom.go:204-246); geom code embeds dim per
-    makegeomcode (geom.go:59-76: dim==2 → code=type, else code=type<<4|dim);
-    bbox stays 4-valued x/y regardless of dim (bb.go:10-37)."""
-    n = len(ids)
-    if n == 0:
-        return pa.array([], type=pa.binary())
-    if not (2 <= dim <= 15):
-        raise ValueError(f"dim must be 2..15, got {dim}")
-    if geom_type not in (2, 4):
-        raise ValueError("encode_lines_kernel handles LineString(2)/MultiPoint(4)")
-    if (np.asarray(nv) <= 0).any():
-        # reduceat over an empty segment borrows the neighbor's value and
-        # silently corrupts every later frame in the batch — reject
-        raise ValueError("feature with zero vertices; filter before encoding")
-    geom_code = geom_type if dim == 2 else (geom_type << 4) | dim
-    q = core.quantize_vec(coords).reshape(-1, dim)  # (total_v, dim)
-    starts = np.zeros(n, dtype=np.int64)
-    np.cumsum(nv[:-1], out=starts[1:])
-    # segmented delta: d[i] = q[i] - q[i-1], reset at row starts
-    d = np.empty_like(q)
-    d[0] = q[0]
-    d[1:] = q[1:] - q[:-1]
-    d[starts] = q[starts]
-    zz = core.zigzag_vec(d.reshape(-1))  # interleaved x,y zigzag deltas
-
-    # per-feature bbox from quantized vertices (bb.go:10-37 over lattice)
-    ends = starts + nv
-    minx = np.minimum.reduceat(q[:, 0], starts)
-    maxx = np.maximum.reduceat(q[:, 0], starts)
-    miny = np.minimum.reduceat(q[:, 1], starts)
-    maxy = np.maximum.reduceat(q[:, 1], starts)
-    bbox_zz = core.zigzag_vec(np.stack([minx, miny, maxx, maxy], axis=1).reshape(-1))
-
-    mid, lid = _varint_matrix(ids.astype(np.uint64))
-    mg, lg = _varint_matrix(zz)
-    mb, lb = _varint_matrix(bbox_zz)
-    # per-feature packed-geometry byte length = sum of its delta varints
-    tok_starts = dim * starts
-    glen = np.add.reduceat(lg, tok_starts)
-    blen = lb.reshape(n, 4).sum(axis=1)
-    mgl, lgl = _varint_matrix(glen.astype(np.uint64))
-    mbl, lbl = _varint_matrix(blen.astype(np.uint64))
-
-    total = 1 + lid + 2 + 1 + lgl + glen + 1 + lbl + blen
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(total, out=offsets[1:])
-    buf = np.empty(offsets[-1], dtype=np.uint8)
-
-    w = _FrameWriter(buf, offsets[:-1])
-    put_const, put_mat = w.const, w.mat
-    put_segmented = w.segmented
-
-    put_const(8)
-    put_mat(mid, lid)
-    put_const(24)
-    put_const(geom_code)  # LineString; dim embedded when > 2
-    put_const(34)
-    put_mat(mgl, lgl)
-    put_segmented(mg, lg, tok_starts, dim * nv, glen)
-    put_const(42)
-    put_mat(mbl, lbl)
-    put_segmented(mb, lb, np.arange(n) * 4, np.full(n, 4), blen)
-    assert np.array_equal(w.pos, offsets[1:])
-
-    return pa.BinaryArray.from_buffers(
-        pa.binary(), n,
-        [None, pa.py_buffer(offsets.astype(np.int32).tobytes()), pa.py_buffer(buf.tobytes())],
-    )
-
-
 def _lines_core(ids: np.ndarray, code0: int, tokens: np.ndarray,
                 counts: np.ndarray):
     """LineString/MultiPoint decode over geometry-payload tokens: every
@@ -516,99 +307,6 @@ def _lines_core(ids: np.ndarray, code0: int, tokens: np.ndarray,
     base[1:] = c[v_starts[1:] - 1]
     coords_q = c - np.repeat(base, nv, axis=0)
     return ids, coords_q.reshape(-1), nv
-
-
-def decode_lines_kernel(frames: pa.Array):
-    """Decode N LineString frames → (ids, flat quantized coords, nv).
-
-    Geometry payloads are field-walked out of each frame (properties /
-    bbox / field order tolerated — reader parity with read_feature.go),
-    gathered contiguously, and swept in one varint pass; segmented cumsum
-    (global cumsum minus per-row offset) rebuilds absolute lattice
-    coordinates."""
-    n, ids, codes, tokens, first, counts = _tokenize_geometry(frames)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e, e
-    code0 = int(codes[0])
-    if not np.all(codes == code0):
-        raise ValueError("mixed-dim LineString batch; use decode_geometries")
-    return _lines_core(ids, code0, tokens, counts)
-
-
-def encode_lines(df: DataFrame, id_col: str = "line_id", coords: str = "coords",
-                 out: str = "geobuf", dim: int = 2) -> DataFrame:
-    """(id, coords flat array<double>) → (id, geobuf) via the vectorized
-    LineString kernel (one Arrow pass). `dim` is the vertex width (2=x/y,
-    3=x/y/z, … up to 15) of the interleaved coords array."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField(out, T.BinaryType()),
-    ])
-
-    def _enc(batches):
-        for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            carr = batch.column(1)
-            flat = carr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            offs = carr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            nv = (offs[1:] - offs[:-1]) // dim
-            frames = encode_lines_kernel(ids, flat, nv, dim=dim)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()), frames], names=[id_col, out]
-            )
-
-    return df.select(id_col, coords).mapInArrow(_enc, schema)
-
-
-def decode_lines(df: DataFrame, bin_col: str = "geobuf", id_col: str = "line_id") -> DataFrame:
-    """LineString frames → (id, coords_q flat array<bigint>) — exact ints."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("coords_q", T.ArrayType(T.LongType())),
-    ])
-
-    def _dec(batches):
-        for batch in batches:
-            frames = batch.column(batch.schema.get_field_index(bin_col))
-            ids, coords_q, nv = decode_lines_kernel(frames)
-            total_v = int(nv.sum())
-            dim = len(coords_q) // total_v if total_v else 2
-            offs = np.zeros(len(ids) + 1, dtype=np.int32)
-            np.cumsum(nv * dim, out=offs[1:])
-            carr = pa.ListArray.from_arrays(
-                pa.array(offs, type=pa.int32()), pa.array(coords_q, type=pa.int64())
-            )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()), carr], names=[id_col, "coords_q"]
-            )
-
-    return df.select(bin_col).mapInArrow(_dec, schema)
-
-
-def roundtrip_points(df: DataFrame, id_col: str = "doc_id", lon: str = "lon",
-                     lat: str = "lat") -> DataFrame:
-    """Fused encode→decode in ONE Python round-trip (bench/verify path):
-    proves the wire format while paying serde once."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("lon_q", T.LongType()),
-        T.StructField("lat_q", T.LongType()),
-    ])
-
-    def _rt(batches):
-        for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            lons = batch.column(1).to_numpy(zero_copy_only=False).astype(np.float64)
-            lats = batch.column(2).to_numpy(zero_copy_only=False).astype(np.float64)
-            frames = encode_points_kernel(ids, lons, lats)
-            # payload-walk decode: ~2-4x the fixed 14-token tokenizer
-            dids, qx, qy = decode_points_any_kernel(frames)
-            yield pa.RecordBatch.from_arrays([
-                pa.array(dids.astype(np.int64)), pa.array(qx), pa.array(qy),
-            ], names=[id_col, "lon_q", "lat_q"])
-
-    return df.select(id_col, lon, lat).mapInArrow(_rt, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -654,142 +352,16 @@ def encode_features_generic(df: DataFrame, out: str = "geobuf") -> DataFrame:
     )
 
 
-def decode_features_generic(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
-    """Decode arbitrary geobuf frames → GEOM_SCHEMA rows (cold path)."""
-    import json
-
-    def _dec(batches):
-        for pdf in batches:
-            rows = []
-            for frame in pdf[bin_col]:
-                f = core.decode_feature(bytes(frame))
-                rows.append({
-                    "id": f.id, "geom_type": f.geom_type, "dim": f.dim,
-                    "coords": f.coords.tolist(), "ring_lens": f.ring_lens.tolist(),
-                    "part_rings": f.part_rings.tolist(),
-                    "props_json": json.dumps(f.properties, sort_keys=True),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in GEOM_SCHEMA.fields])
-
-    return df.select(bin_col).mapInPandas(_dec, GEOM_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Polygon / MultiLineString batch kernels — ring-structured geometries,
-# fully vectorized. Wire shape (geom.go:255-273): per ring a varint
-# `len(ring)·dim` then that ring's packed zigzag deltas, delta state
-# resetting at each ring (readline per ring, geom.go:103-111,127-157).
-# MultiPoint shares the LineString layout (packed deltas, no ring counts).
-# ---------------------------------------------------------------------------
-
-def encode_rings_kernel(ids: np.ndarray, coords: np.ndarray, ring_nv: np.ndarray,
-                        rings_per_feat: np.ndarray, geom_type: int = 3,
-                        dim: int = 2) -> pa.Array:
-    """Encode N ring-structured features (Polygon=3 / MultiLineString=5).
-
-    coords: flat float64 interleaved across the whole batch; ring_nv:
-    vertices per ring (all rings, feature-major); rings_per_feat: rings
-    per feature."""
-    n = len(ids)
-    if n == 0:
-        return pa.array([], type=pa.binary())
-    if geom_type not in (3, 5):
-        raise ValueError("encode_rings_kernel handles Polygon(3)/MultiLineString(5)")
-    if not (2 <= dim <= 15):
-        raise ValueError(f"dim must be 2..15, got {dim}")
-    if (np.asarray(ring_nv) <= 0).any() or (np.asarray(rings_per_feat) <= 0).any():
-        raise ValueError("empty ring or zero-ring feature; filter before encoding")
-    geom_code = geom_type if dim == 2 else (geom_type << 4) | dim
-
-    q = core.quantize_vec(coords).reshape(-1, dim)  # (total_v, dim)
-    R = len(ring_nv)
-    v_starts = np.zeros(R, dtype=np.int64)
-    np.cumsum(ring_nv[:-1], out=v_starts[1:])
-    # per-ring segmented delta (reset each ring — geom.go:127-157)
-    d = np.empty_like(q)
-    d[0] = q[0]
-    d[1:] = q[1:] - q[:-1]
-    d[v_starts] = q[v_starts]
-    zz = core.zigzag_vec(d.reshape(-1))  # (total_v*dim,) ring-major
-
-    # token stream: per ring [count=nv·dim, deltas…]
-    ring_tok_counts = 1 + ring_nv * dim
-    ring_tok_offs = np.zeros(R, dtype=np.int64)
-    np.cumsum(ring_tok_counts[:-1], out=ring_tok_offs[1:])
-    total_toks = int(ring_tok_counts.sum())
-    tokens = np.empty(total_toks, dtype=np.uint64)
-    tokens[ring_tok_offs] = (ring_nv * dim).astype(np.uint64)
-    is_delta = np.ones(total_toks, dtype=bool)
-    is_delta[ring_tok_offs] = False
-    tokens[is_delta] = zz
-
-    # feature-level grouping
-    feat_ring_start = np.zeros(n, dtype=np.int64)
-    np.cumsum(rings_per_feat[:-1], out=feat_ring_start[1:])
-    feat_tok_start = ring_tok_offs[feat_ring_start]
-    feat_tok_counts = np.add.reduceat(ring_tok_counts, feat_ring_start)
-
-    # per-feature bbox over quantized vertices (x/y only, bb.go:10-37)
-    feat_v_start = v_starts[feat_ring_start]
-    minx = np.minimum.reduceat(q[:, 0], feat_v_start)
-    maxx = np.maximum.reduceat(q[:, 0], feat_v_start)
-    miny = np.minimum.reduceat(q[:, 1], feat_v_start)
-    maxy = np.maximum.reduceat(q[:, 1], feat_v_start)
-    bbox_zz = core.zigzag_vec(np.stack([minx, miny, maxx, maxy], axis=1).reshape(-1))
-
-    mid, lid = _varint_matrix(ids.astype(np.uint64))
-    mg, lg = _varint_matrix(tokens)
-    mb, lb = _varint_matrix(bbox_zz)
-    glen = np.add.reduceat(lg, feat_tok_start)
-    blen = lb.reshape(n, 4).sum(axis=1)
-    mgl, lgl = _varint_matrix(glen.astype(np.uint64))
-    mbl, lbl = _varint_matrix(blen.astype(np.uint64))
-
-    total = 1 + lid + 2 + 1 + lgl + glen + 1 + lbl + blen
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(total, out=offsets[1:])
-    buf = np.empty(offsets[-1], dtype=np.uint8)
-    w = _FrameWriter(buf, offsets[:-1])
-    put_const, put_mat = w.const, w.mat
-    put_segmented = w.segmented
-
-    put_const(8)
-    put_mat(mid, lid)
-    put_const(24)
-    put_const(geom_code)
-    put_const(34)
-    put_mat(mgl, lgl)
-    put_segmented(mg, lg, feat_tok_start, feat_tok_counts, glen)
-    put_const(42)
-    put_mat(mbl, lbl)
-    put_segmented(mb, lb, np.arange(n) * 4, np.full(n, 4), blen)
-    assert np.array_equal(w.pos, offsets[1:])
-
-    return pa.BinaryArray.from_buffers(
-        pa.binary(), n,
-        [None, pa.py_buffer(offsets.astype(np.int32).tobytes()), pa.py_buffer(buf.tobytes())],
-    )
-
-
-def decode_rings_kernel(frames: pa.Array):
-    """Decode N ring-structured frames → (ids, flat quantized coords,
-    ring_nv, rings_per_feat, geom_type, dim).
-
-    Ring boundaries are data-dependent (each ring announces its token
-    count), so the walk iterates max-rings-per-feature times over the
-    active frame set — vectorized within each round."""
-    n, ids, codes, tokens, first, counts = _tokenize_geometry(frames)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e, e, e, 0, 2
-    code0 = int(codes[0])
-    if not np.all(codes == code0):
-        raise ValueError("mixed geom-code batch; use decode_geometries")
-    return _rings_core(ids, code0, tokens, first, counts)
-
-
 def _rings_core(ids: np.ndarray, code0: int, tokens: np.ndarray,
                 first: np.ndarray, counts: np.ndarray):
+    """Polygon/MultiLineString decode over geometry-payload tokens →
+    (ids, flat quantized coords, ring_nv, rings_per_feat, geom_type, dim).
+
+    Wire shape (geom.go:255-273): per ring a varint len(ring)·dim, then
+    that ring's packed deltas with the delta state reset at each ring.
+    Ring boundaries are data-dependent, so the walk iterates
+    max-rings-per-feature rounds over the active frames, vectorized
+    within each round."""
     n = len(ids)
     geom_type = code0 if code0 <= 6 else code0 >> 4
     dim = 2 if code0 <= 6 else code0 & 0xF
@@ -837,181 +409,15 @@ def _rings_core(ids: np.ndarray, code0: int, tokens: np.ndarray,
     return ids, coords_q.reshape(-1), rnv, rings_per_feat, geom_type, dim
 
 
-def encode_polygons(df: DataFrame, id_col: str = "poly_id", coords: str = "coords",
-                    ring_lens: str = "ring_lens", out: str = "geobuf",
-                    geom_type: int = 3, dim: int = 2) -> DataFrame:
-    """(id, coords flat array<double>, ring_lens array<int>) → (id, geobuf)
-    via the vectorized ring kernel (Polygon or MultiLineString)."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField(out, T.BinaryType()),
-    ])
-
-    def _enc(batches):
-        for batch in batches:
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            carr = batch.column(1)
-            flat = carr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            rarr = batch.column(2)
-            ring_nv = rarr.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            roffs = rarr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            rings_per_feat = roffs[1:] - roffs[:-1]
-            frames = encode_rings_kernel(ids, flat, ring_nv, rings_per_feat,
-                                         geom_type=geom_type, dim=dim)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()), frames], names=[id_col, out]
-            )
-
-    return df.select(id_col, coords, ring_lens).mapInArrow(_enc, schema)
-
-
-def decode_polygons(df: DataFrame, bin_col: str = "geobuf", id_col: str = "poly_id") -> DataFrame:
-    """Ring frames → (id, coords_q flat array<bigint>, ring_lens array<int>)."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("coords_q", T.ArrayType(T.LongType())),
-        T.StructField("ring_lens", T.ArrayType(T.IntegerType())),
-    ])
-
-    def _dec(batches):
-        for batch in batches:
-            frames = batch.column(batch.schema.get_field_index(bin_col))
-            ids, coords_q, ring_nv, rpf, _, dim = decode_rings_kernel(frames)
-            coffs = np.zeros(len(ids) + 1, dtype=np.int32)
-            roffs = np.zeros(len(ids) + 1, dtype=np.int32)
-            np.cumsum(rpf, out=roffs[1:])
-            feat_v = np.add.reduceat(ring_nv, roffs[:-1]) if len(ring_nv) else np.zeros(len(ids), np.int64)
-            np.cumsum(feat_v * dim, out=coffs[1:])
-            carr = pa.ListArray.from_arrays(
-                pa.array(coffs, type=pa.int32()), pa.array(coords_q, type=pa.int64()))
-            rarr = pa.ListArray.from_arrays(
-                pa.array(roffs, type=pa.int32()), pa.array(ring_nv.astype(np.int32), type=pa.int32()))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()), carr, rarr],
-                names=[id_col, "coords_q", "ring_lens"])
-
-    return df.select(bin_col).mapInArrow(_dec, schema)
-
-
-# ---------------------------------------------------------------------------
-# MultiPolygon batch kernels — two-level nesting (geom.go:276-302): per
-# polygon a varint ring-count, then per ring varint(len·dim) + deltas.
-# ---------------------------------------------------------------------------
-
-def encode_multipolygons_kernel(ids: np.ndarray, coords: np.ndarray,
-                                ring_nv: np.ndarray, rings_per_poly: np.ndarray,
-                                polys_per_feat: np.ndarray, dim: int = 2) -> pa.Array:
-    """Encode N MultiPolygon features → Arrow binary frames.
-
-    ring_nv: vertices per ring (all rings, poly-major); rings_per_poly:
-    rings per polygon (all polygons, feature-major); polys_per_feat:
-    polygons per feature."""
-    n = len(ids)
-    if n == 0:
-        return pa.array([], type=pa.binary())
-    geom_code = 6 if dim == 2 else (6 << 4) | dim
-    if ((np.asarray(ring_nv) <= 0).any() or (np.asarray(rings_per_poly) <= 0).any()
-            or (np.asarray(polys_per_feat) <= 0).any()):
-        raise ValueError("empty ring/polygon/feature; filter before encoding")
-
-    q = core.quantize_vec(coords).reshape(-1, dim)
-    R = len(ring_nv)
-    P = len(rings_per_poly)
-    v_starts = np.zeros(R, dtype=np.int64)
-    np.cumsum(ring_nv[:-1], out=v_starts[1:])
-    d = np.empty_like(q)
-    d[0] = q[0]
-    d[1:] = q[1:] - q[:-1]
-    d[v_starts] = q[v_starts]
-    zz = core.zigzag_vec(d.reshape(-1))
-
-    # token stream: per poly [nrings, per ring [cnt, deltas…]]
-    ring_tok_counts = 1 + ring_nv * dim                      # per ring
-    poly_ring_start = np.zeros(P, dtype=np.int64)
-    np.cumsum(rings_per_poly[:-1], out=poly_ring_start[1:])
-    poly_tok_counts = 1 + np.add.reduceat(ring_tok_counts, poly_ring_start)
-    poly_tok_offs = np.zeros(P, dtype=np.int64)
-    np.cumsum(poly_tok_counts[:-1], out=poly_tok_offs[1:])
-    total_toks = int(poly_tok_counts.sum())
-    tokens = np.empty(total_toks, dtype=np.uint64)
-    filled = np.zeros(total_toks, dtype=bool)
-    tokens[poly_tok_offs] = rings_per_poly.astype(np.uint64)
-    filled[poly_tok_offs] = True
-    # ring count tokens: offset of each ring inside the stream
-    ring_tok_offs = np.zeros(R, dtype=np.int64)
-    np.cumsum(ring_tok_counts[:-1], out=ring_tok_offs[1:])
-    # rings shift right by the number of poly-header tokens before them:
-    # ring g belongs to poly p(g) → +p(g)+1 headers
-    p_of_ring = np.repeat(np.arange(P), rings_per_poly)
-    ring_pos = ring_tok_offs + p_of_ring + 1
-    tokens[ring_pos] = (ring_nv * dim).astype(np.uint64)
-    filled[ring_pos] = True
-    tokens[~filled] = zz
-
-    feat_poly_start = np.zeros(n, dtype=np.int64)
-    np.cumsum(polys_per_feat[:-1], out=feat_poly_start[1:])
-    feat_tok_start = poly_tok_offs[feat_poly_start]
-    feat_tok_counts = np.add.reduceat(poly_tok_counts, feat_poly_start)
-    feat_ring_start = poly_ring_start[feat_poly_start]
-    feat_v_start = v_starts[feat_ring_start]
-    minx = np.minimum.reduceat(q[:, 0], feat_v_start)
-    maxx = np.maximum.reduceat(q[:, 0], feat_v_start)
-    miny = np.minimum.reduceat(q[:, 1], feat_v_start)
-    maxy = np.maximum.reduceat(q[:, 1], feat_v_start)
-    bbox_zz = core.zigzag_vec(np.stack([minx, miny, maxx, maxy], axis=1).reshape(-1))
-
-    mid, lid = _varint_matrix(ids.astype(np.uint64))
-    mg, lg = _varint_matrix(tokens)
-    mb, lb = _varint_matrix(bbox_zz)
-    glen = np.add.reduceat(lg, feat_tok_start)
-    blen = lb.reshape(n, 4).sum(axis=1)
-    mgl, lgl = _varint_matrix(glen.astype(np.uint64))
-    mbl, lbl = _varint_matrix(blen.astype(np.uint64))
-
-    total = 1 + lid + 2 + 1 + lgl + glen + 1 + lbl + blen
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(total, out=offsets[1:])
-    buf = np.empty(offsets[-1], dtype=np.uint8)
-    w = _FrameWriter(buf, offsets[:-1])
-    put_const, put_mat = w.const, w.mat
-    put_segmented = w.segmented
-
-    put_const(8)
-    put_mat(mid, lid)
-    put_const(24)
-    put_const(geom_code)
-    put_const(34)
-    put_mat(mgl, lgl)
-    put_segmented(mg, lg, feat_tok_start, feat_tok_counts, glen)
-    put_const(42)
-    put_mat(mbl, lbl)
-    put_segmented(mb, lb, np.arange(n) * 4, np.full(n, 4), blen)
-    assert np.array_equal(w.pos, offsets[1:])
-
-    return pa.BinaryArray.from_buffers(
-        pa.binary(), n,
-        [None, pa.py_buffer(offsets.astype(np.int32).tobytes()), pa.py_buffer(buf.tobytes())],
-    )
-
-
-def decode_multipolygons_kernel(frames: pa.Array):
-    """Decode N MultiPolygon frames → (ids, flat quantized coords, ring_nv,
-    rings_per_poly, polys_per_feat, dim).
-
-    Two-level jump walk: each round, every active feature consumes either a
-    polygon header token or one whole ring — vectorized per round."""
-    n, ids, codes, tokens, first, counts = _tokenize_geometry(frames)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e, e, e, e, 2
-    code0 = int(codes[0])
-    if not np.all(codes == code0):
-        raise ValueError("mixed geom-code batch; use decode_geometries")
-    return _multipolygons_core(ids, code0, tokens, first, counts)
-
-
 def _multipolygons_core(ids: np.ndarray, code0: int, tokens: np.ndarray,
                         first: np.ndarray, counts: np.ndarray):
+    """MultiPolygon decode over geometry-payload tokens → (ids, flat
+    quantized coords, ring_nv, rings_per_poly, polys_per_feat, dim).
+
+    Wire shape (geom.go:276-302): per polygon a varint ring count, then
+    per ring varint(len·dim) + deltas. Two-level jump walk: each round,
+    every active feature consumes either a polygon header token or one
+    whole ring."""
     n = len(ids)
     if not (code0 == 6 or (code0 > 6 and code0 >> 4 == 6)):
         raise ValueError("not a MultiPolygon batch")
@@ -1073,44 +479,6 @@ def _multipolygons_core(ids: np.ndarray, code0: int, tokens: np.ndarray,
     return ids, coords_q.reshape(-1), rnv, rings_per_poly, polys_per_feat, dim
 
 
-# ---------------------------------------------------------------------------
-# mixed-batch dispatch: group frames by geom code, run each group through
-# its specialized kernel — heterogeneous batches stay vectorized instead of
-# dropping to the per-feature generic path.
-# ---------------------------------------------------------------------------
-
-QUANT_GEOM_SCHEMA = T.StructType([
-    T.StructField("id", T.LongType()),
-    T.StructField("geom_type", T.IntegerType()),
-    T.StructField("dim", T.IntegerType()),
-    T.StructField("coords_q", T.ArrayType(T.LongType())),
-    T.StructField("ring_lens", T.ArrayType(T.IntegerType())),
-    T.StructField("part_rings", T.ArrayType(T.IntegerType())),
-])
-
-
-def _frame_geom_codes(frames: pa.Array) -> np.ndarray:
-    """Geom code of every frame without full decode — a field walk, so
-    frames with properties or without an id field parse correctly (the
-    old fixed-offset scan misread the first property byte as the code)."""
-    combined = pa.concat_arrays([frames.cast(pa.binary())])
-    flat = np.frombuffer(combined.buffers()[2], dtype=np.uint8)
-    offs = np.frombuffer(combined.buffers()[1], dtype=np.int32)
-    n = len(combined)
-    starts = offs[combined.offset : combined.offset + n].astype(np.int64)
-    ends = offs[combined.offset + 1 : combined.offset + n + 1].astype(np.int64)
-    codes = np.full(n, -1, dtype=np.int64)
-    for active, tag, pstart, plen, v, _ in frame_fields_walk(flat, starts, ends):
-        is_code = tag == 0x18
-        if is_code.any():
-            sel = active[is_code]
-            first = codes[sel] < 0
-            codes[sel[first]] = v[is_code][first].astype(np.int64)
-    if (codes < 0).any():
-        raise ValueError("frame without a geometry-type field")
-    return codes
-
-
 def _decode_code_group(code0: int, gids: np.ndarray, toks: np.ndarray,
                        first: np.ndarray, cnt: np.ndarray) -> dict:
     """Decode one homogeneous-geom-code group of payload-token frames →
@@ -1157,54 +525,6 @@ def _decode_code_group(code0: int, gids: np.ndarray, toks: np.ndarray,
                     ring_nv=ring_nv, rings_pf=rings_pf, pvals=rpp,
                     parts_pf=ppf)
     raise ValueError(f"unknown geom type {gt}")
-
-
-def decode_geometries(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
-    """Decode MIXED geobuf geometry frames → quantized columnar rows.
-
-    ONE field walk + payload tokenize per Arrow batch, then group by the
-    FULL geom code — mixed dims and frames carrying properties / bbox /
-    any field order all stay on vectorized kernels (points / line-shaped /
-    ring-shaped / nested MultiPolygon). Output order within a batch is
-    regrouped by code — set semantics, like every distributed decode."""
-
-    def _dec(batches):
-        for batch in batches:
-            frames = batch.column(batch.schema.get_field_index(bin_col))
-            frames = pa.concat_arrays([frames.cast(pa.binary())])
-            if len(frames) == 0:
-                continue
-            _, all_ids, codes, all_tok, all_first, all_cnt = \
-                _tokenize_geometry(frames)
-            for code in np.unique(codes):
-                sel = np.flatnonzero(codes == code)
-                toks, first, cnt = _gather_token_group(
-                    all_tok, all_first, all_cnt, sel)
-                g = _decode_code_group(int(code), all_ids[sel], toks, first, cnt)
-                m = len(g["ids"])
-                coord_off = np.zeros(m + 1, dtype=np.int32)
-                np.cumsum(g["feat_v"] * g["dim"], out=coord_off[1:])
-                carr = pa.ListArray.from_arrays(
-                    pa.array(coord_off, type=pa.int32()),
-                    pa.array(g["coords_q"], type=pa.int64()))
-                ring_off = np.zeros(m + 1, dtype=np.int32)
-                np.cumsum(g["rings_pf"], out=ring_off[1:])
-                rarr = pa.ListArray.from_arrays(
-                    pa.array(ring_off, type=pa.int32()),
-                    pa.array(g["ring_nv"].astype(np.int32), type=pa.int32()))
-                part_off = np.zeros(m + 1, dtype=np.int32)
-                np.cumsum(g["parts_pf"], out=part_off[1:])
-                parr = pa.ListArray.from_arrays(
-                    pa.array(part_off, type=pa.int32()),
-                    pa.array(g["pvals"].astype(np.int32), type=pa.int32()))
-                yield pa.RecordBatch.from_arrays([
-                    pa.array(g["ids"], type=pa.int64()),
-                    pa.array(np.full(m, g["gt"], dtype=np.int32)),
-                    pa.array(np.full(m, g["dim"], dtype=np.int32)),
-                    carr, rarr, parr,
-                ], names=[f.name for f in QUANT_GEOM_SCHEMA.fields])
-
-    return df.select(bin_col).mapInArrow(_dec, QUANT_GEOM_SCHEMA)
 
 
 def decode_features_fast(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
@@ -1780,41 +1100,3 @@ def frame_bbox(df: DataFrame, bin_col: str = "geobuf") -> DataFrame:
                 [col(w), col(s_), col(e_), col(n_)], names=["w_q", "s_q", "e_q", "n_q"])
 
     return df.select(bin_col).mapInArrow(_b, schema)
-
-
-def decode_points_any_kernel(frames: pa.Array):
-    """Decode point frames REGARDLESS of extra fields (properties etc.):
-    field-walk to the geometry payload per frame, gather those byte ranges
-    into one contiguous buffer, single varint sweep → (ids, qx, qy).
-    Stays fully vectorized where `decode_points_kernel`'s fixed 14-token
-    layout would break."""
-    n, ids, _codes, tokens, _first, counts = _tokenize_geometry(frames)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e, e
-    if len(tokens) != 2 * n or (counts != 2).any():
-        raise ValueError("not a point batch (geometry is not 2 values/frame)")
-    tok = tokens.reshape(n, 2)
-    return ids, core.unzigzag_vec(tok[:, 0]), core.unzigzag_vec(tok[:, 1])
-
-
-def decode_points_any(df: DataFrame, bin_col: str = "geobuf",
-                      id_col: str = "id") -> DataFrame:
-    """DataFrame wrapper of `decode_points_any_kernel` — point frames with
-    any extra fields → (id, lon_q, lat_q)."""
-    schema = T.StructType([
-        T.StructField(id_col, T.LongType()),
-        T.StructField("lon_q", T.LongType()),
-        T.StructField("lat_q", T.LongType()),
-    ])
-
-    def _dec(batches):
-        for batch in batches:
-            frames = batch.column(batch.schema.get_field_index(bin_col))
-            ids, qx, qy = decode_points_any_kernel(frames)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, type=pa.int64()), pa.array(qx, type=pa.int64()),
-                 pa.array(qy, type=pa.int64())],
-                names=[id_col, "lon_q", "lat_q"])
-
-    return df.select(bin_col).mapInArrow(_dec, schema)

@@ -454,27 +454,39 @@ def sql_bfs_hops(edges_cte: str, seed_pred: str, max_hops: int = 3,
     """DuckDB twin of bfs_hops: the frontier loop unrolled as chained
     CTEs bfs0..bfs{max_hops}; seed_pred is a boolean SQL predicate over the
     node name column `n` of the adjacency CTE."""
-    steps = []
-    for h in range(1, max_hops + 1):
-        steps.append(f"""
-        bfs{h} AS MATERIALIZED (SELECT host, min(hop) AS hop FROM (
-                    SELECT host, hop FROM bfs{h - 1}
-                    UNION ALL
-                    SELECT adj.nb AS host, {h} AS hop
-                    FROM bfs{h - 1} f JOIN adj ON adj.n = f.host
-                    WHERE f.hop = {h - 1})
-                 GROUP BY 1)""")
     return f"""
         WITH {edges_cte},
-        und AS (SELECT DISTINCT least({src}, {dst}) AS u,
+        {sql_bfs_adjacency(src, dst)},
+        {sql_bfs_steps(seed_pred, max_hops)}
+        SELECT host, CAST(hop AS INT) AS hop FROM bfs{max_hops}"""
+
+
+def sql_bfs_adjacency(src: str = "src", dst: str = "dst") -> str:
+    """CTEs und, adj(n, nb) and nodes(n): the undirected simple graph of
+    the edge CTE `ed` that sql_bfs_steps walks."""
+    return f"""und AS (SELECT DISTINCT least({src}, {dst}) AS u,
                                 greatest({src}, {dst}) AS v
                 FROM ed WHERE {src} <> {dst}),
         adj AS (SELECT u AS n, v AS nb FROM und
                 UNION ALL SELECT v AS n, u AS nb FROM und),
-        nodes AS (SELECT DISTINCT n FROM adj),
-        bfs0 AS (SELECT n AS host, 0 AS hop FROM nodes WHERE {seed_pred}),
-        {','.join(steps)}
-        SELECT host, CAST(hop AS INT) AS hop FROM bfs{max_hops}"""
+        nodes AS (SELECT DISTINCT n FROM adj)"""
+
+
+def sql_bfs_steps(seed_pred: str, max_hops: int, name: str = "bfs") -> str:
+    """The BFS frontier loop as CTEs {name}0..{name}{max_hops} of (host,
+    hop) over the sql_bfs_adjacency CTEs; distinct names let several
+    sweeps share one WITH."""
+    steps = [f"{name}0 AS (SELECT n AS host, 0 AS hop FROM nodes WHERE {seed_pred})"]
+    for h in range(1, max_hops + 1):
+        steps.append(f"""
+        {name}{h} AS MATERIALIZED (SELECT host, min(hop) AS hop FROM (
+                    SELECT host, hop FROM {name}{h - 1}
+                    UNION ALL
+                    SELECT adj.nb AS host, {h} AS hop
+                    FROM {name}{h - 1} f JOIN adj ON adj.n = f.host
+                    WHERE f.hop = {h - 1})
+                 GROUP BY 1)""")
+    return ",".join(steps)
 
 
 def sssp_bounded(edges: DataFrame, seeds: DataFrame, max_rounds: int = 3,

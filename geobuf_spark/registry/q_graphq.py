@@ -687,17 +687,22 @@ def q_diameter_sweep(spark, sf):
         "diameter_lb int")
 
 def _diameter_sweep_sql() -> str:
+    # one WITH: the links CTE is defined once (it is MATERIALIZED, and
+    # DuckDB rejects a second definition), each sweep gets its own names
     from geobuf_spark.operators import graph
-    b1 = graph.sql_bfs_hops(_host_edges_cte(), "n = (SELECT min(n) "
-                            "FROM nodes)", max_hops=DIAM_CAP)
+    sweep1 = graph.sql_bfs_steps("n = (SELECT min(n) FROM nodes)",
+                                 DIAM_CAP, name="bfs_a")
     # second sweep: seed = argmax hop of sweep 1 (ties → min host)
-    b2 = graph.sql_bfs_hops(
-        _host_edges_cte(),
+    sweep2 = graph.sql_bfs_steps(
         "n = (SELECT host FROM s1 ORDER BY hop DESC, host LIMIT 1)",
-        max_hops=DIAM_CAP)
+        DIAM_CAP, name="bfs_b")
     return f"""
-        WITH s1 AS ({b1}),
-        s2 AS ({b2}),
+        WITH {_host_edges_cte()},
+        {graph.sql_bfs_adjacency()},
+        {sweep1},
+        s1 AS (SELECT host, CAST(hop AS INT) AS hop FROM bfs_a{DIAM_CAP}),
+        {sweep2},
+        s2 AS (SELECT host, CAST(hop AS INT) AS hop FROM bfs_b{DIAM_CAP}),
         f1 AS (SELECT host, hop FROM s1
                ORDER BY hop DESC, host LIMIT 1),
         f2 AS (SELECT host, hop FROM s2

@@ -5,6 +5,7 @@ import json
 
 import numpy as np
 import pytest
+from geobuf_fixtures import batch_decode
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -203,20 +204,19 @@ def test_geometry_collection_bbox():
         min_size=1, max_size=10),
 )
 def test_fuzz_lines_batch_kernel_roundtrip(lines):
-    """Hypothesis: arbitrary float polylines round-trip the vectorized
-    LineString batch kernel exactly on the quantized lattice."""
+    """Hypothesis: arbitrary float polylines, written by the reference
+    encoder, round-trip the vectorized LineString batch decode kernel
+    exactly on the quantized lattice."""
     import numpy as np
-
-    from geobuf_spark.codec import spark_codec as sc
 
     nv = np.array([len(l) for l in lines], dtype=np.int64)
     coords = np.array([c for l in lines for pt in l for c in pt], dtype=np.float64)
     ids = np.arange(len(lines), dtype=np.int64)
-    arr = sc.encode_lines_kernel(ids, coords, nv)
-    dids, dcoords, dnv = sc.decode_lines_kernel(arr)
-    assert np.array_equal(dids, ids)
-    assert np.array_equal(dnv, nv)
-    assert np.array_equal(dcoords, core.quantize_vec(coords))
+    g = batch_decode([core.encode_feature(core.Feature.from_geojson(
+        "LineString", [list(pt) for pt in l], id=i)) for i, l in enumerate(lines)])
+    assert np.array_equal(g["ids"], ids)
+    assert np.array_equal(g["feat_v"], nv)
+    assert np.array_equal(g["coords_q"], core.quantize_vec(coords))
 
 
 @settings(max_examples=30, deadline=None)
@@ -229,23 +229,22 @@ def test_fuzz_lines_batch_kernel_roundtrip(lines):
         min_size=1, max_size=6),
 )
 def test_fuzz_multipolygon_batch_kernel_roundtrip(feats):
-    """Hypothesis: nested MultiPolygon structures round-trip the two-level
-    batch kernel with exact structure arrays."""
+    """Hypothesis: nested MultiPolygon structures, written by the
+    reference encoder, round-trip the two-level batch decode kernel with
+    exact structure arrays."""
     import numpy as np
-
-    from geobuf_spark.codec import spark_codec as sc
 
     ppf = np.array([len(f) for f in feats], dtype=np.int64)
     rpp = np.array([1 for f in feats for _ in f], dtype=np.int64)
     ring_nv = np.array([len(r) for f in feats for r in f], dtype=np.int64)
     coords = np.array([c for f in feats for r in f for pt in r for c in pt], dtype=np.float64)
-    ids = np.arange(len(feats), dtype=np.int64)
-    arr = sc.encode_multipolygons_kernel(ids, coords, ring_nv, rpp, ppf)
-    dids, dcoords, dnv, drpp, dppf, dim = sc.decode_multipolygons_kernel(arr)
-    assert dim == 2
-    assert np.array_equal(dppf, ppf) and np.array_equal(drpp, rpp)
-    assert np.array_equal(dnv, ring_nv)
-    assert np.array_equal(dcoords, core.quantize_vec(coords))
+    g = batch_decode([core.encode_feature(core.Feature.from_geojson(
+        "MultiPolygon", [[[list(pt) for pt in r]] for r in f], id=i))
+        for i, f in enumerate(feats)])
+    assert g["dim"] == 2
+    assert np.array_equal(g["parts_pf"], ppf) and np.array_equal(g["pvals"], rpp)
+    assert np.array_equal(g["ring_nv"], ring_nv)
+    assert np.array_equal(g["coords_q"], core.quantize_vec(coords))
 
 
 # ---------------------------------------------------------------------------

@@ -1,104 +1,125 @@
-"""JVM decode path (codec/jvm/GbCodec.java) — exact parity vs the Arrow
-kernels it twins. The jar is committed, so these run everywhere; if the
-jar were deleted AND no JDK existed, register() returns False and the
-suite skips rather than fails (the JVM path is an optional accelerator,
-the Arrow kernels are the portable contract).
+"""JVM codec (codec/jvm/GbCodec.java) — the production point, line and
+polygon codec behind spark_codec — held to the reference oracle
+codec/core.py: encode byte for byte against core.encode_feature, decode
+against core.decode_feature(..., quantized=True). The jar is committed,
+so these run everywhere; a missing jar with no JDK is a loud error.
 """
 import numpy as np
-import pyarrow as pa
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
-from geobuf_spark.codec import jvm_codec, spark_codec
-
-
-@pytest.fixture(scope="module")
-def jvm(spark):
-    if not jvm_codec.register(spark):
-        pytest.skip("no gb-codec.jar and no JDK to build it")
-    return spark
+from geobuf_spark.codec import core, jvm_codec, spark_codec
 
 
 def _frames_df(spark, frames):
     return spark.createDataFrame(
-        pa.table({"geobuf": frames}).to_pandas())
+        [(bytearray(f),) for f in frames], "geobuf binary")
 
 
-def test_register_idempotent(jvm):
-    assert jvm_codec.register(jvm) is True
-    assert jvm_codec.register(jvm) is True
+def _point_frames(ids, lon, lat):
+    return [core.encode_feature(core.Feature.from_geojson(
+        "Point", [float(x), float(y)], id=int(i)))
+        for i, x, y in zip(ids, lon, lat)]
 
 
-def test_point_agg_parity(jvm):
+def _line_frame(fid, flat, dim=2):
+    return core.encode_feature(core.Feature.from_geojson(
+        "LineString", np.asarray(flat).reshape(-1, dim).tolist(), id=int(fid)))
+
+
+def _poly_frame(fid, flat, ring_nv):
+    rings, off = [], 0
+    for nv in ring_nv:
+        rings.append(np.asarray(flat[off:off + 2 * nv]).reshape(-1, 2).tolist())
+        off += 2 * nv
+    return core.encode_feature(core.Feature.from_geojson(
+        "Polygon", rings, id=int(fid)))
+
+
+def _quantized(frame):
+    return core.decode_feature(bytes(frame), quantized=True)
+
+
+def test_register_idempotent(spark):
+    assert jvm_codec.register(spark) is True
+    assert jvm_codec.register(spark) is True
+
+
+def test_register_raises_without_jar(spark, monkeypatch):
+    """No prebuilt jar and no JDK: register fails loudly with the cause
+    instead of reporting False for a caller to ignore."""
+    import tools.build_jvm
+
+    monkeypatch.setattr(tools.build_jvm, "build", lambda: None)
+    fresh = spark.newSession()  # UDF registrations are per session
+    with pytest.raises(RuntimeError, match="no JDK"):
+        jvm_codec.register(fresh)
+
+
+def test_point_agg_parity(spark):
     rng = np.random.default_rng(11)
     n = 5000
     ids = rng.integers(0, 2**40, n).astype(np.int64)
     lon = rng.uniform(-180, 180, n)
     lat = rng.uniform(-90, 90, n)
-    df = _frames_df(jvm, spark_codec.encode_points_kernel(ids, lon, lat))
-    a = spark_codec.decode_points_agg(df).collect()[0]
-    j = jvm_codec.decode_points_agg_jvm(df).collect()[0]
-    assert a == j
+    frames = _point_frames(ids, lon, lat)
+    got = spark_codec.decode_points_agg(_frames_df(spark, frames)).collect()[0]
+    want = [_quantized(f) for f in frames]
+    assert tuple(got) == (
+        n, sum(f.id for f in want),
+        sum(int(f.coords[0]) for f in want), sum(int(f.coords[1]) for f in want))
 
 
-def test_point_decode_parity(jvm):
+def test_point_decode_parity(spark):
     rng = np.random.default_rng(12)
     n = 300
     ids = np.arange(n, dtype=np.int64)
     lon = rng.uniform(-180, 180, n)
     lat = rng.uniform(-90, 90, n)
-    df = _frames_df(jvm, spark_codec.encode_points_kernel(ids, lon, lat))
-    a = {r["id"]: (r["lon_q"], r["lat_q"])
-         for r in spark_codec.decode_points_any(df).collect()}
-    b = {r["id"]: (r["lon_q"], r["lat_q"])
-         for r in jvm_codec.decode_points_jvm(df).collect()}
-    assert a == b
+    frames = _point_frames(ids, lon, lat)
+    got = {r["id"]: (r["lon_q"], r["lat_q"])
+           for r in spark_codec.decode_points(_frames_df(spark, frames)).collect()}
+    want = {f.id: tuple(f.coords.tolist()) for f in map(_quantized, frames)}
+    assert got == want
 
 
 @pytest.mark.parametrize("dim", [2, 3, 5])
-def test_line_decode_parity(jvm, dim):
+def test_line_decode_parity(spark, dim):
     rng = np.random.default_rng(20 + dim)
     n, nv = 200, 7
     ids = np.arange(n, dtype=np.int64) * 3 + 1
-    flat = rng.uniform(-170, 170, n * nv * dim)
-    nvs = np.full(n, nv, dtype=np.int64)
-    df = _frames_df(
-        jvm, spark_codec.encode_lines_kernel(ids, flat, nvs, dim=dim))
-    a = {r["line_id"]: list(r["coords_q"])
-         for r in spark_codec.decode_lines(df).collect()}
-    b = {r["line_id"]: list(r["coords_q"])
-         for r in jvm_codec.decode_lines_jvm(df).collect()}
-    assert a == b
+    flat = rng.uniform(-170, 170, (n, nv * dim))
+    frames = [_line_frame(i, c, dim) for i, c in zip(ids, flat)]
+    got = {r["line_id"]: list(r["coords_q"])
+           for r in spark_codec.decode_lines(_frames_df(spark, frames)).collect()}
+    want = {f.id: f.coords.tolist() for f in map(_quantized, frames)}
+    assert got == want
 
 
-def test_line_agg_parity(jvm):
+def test_line_agg_parity(spark):
     rng = np.random.default_rng(31)
     n, nv = 2000, 12
     ids = rng.permutation(n).astype(np.int64)
-    flat = rng.uniform(-179, 179, n * nv * 2)
-    nvs = np.full(n, nv, dtype=np.int64)
-    df = _frames_df(
-        jvm, spark_codec.encode_lines_kernel(ids, flat, nvs, dim=2))
-    a = spark_codec.decode_lines_agg(df).collect()[0]
-    j = jvm_codec.decode_lines_agg_jvm(df).collect()[0]
-    assert a == j
+    flat = rng.uniform(-179, 179, (n, nv * 2))
+    frames = [_line_frame(i, c) for i, c in zip(ids, flat)]
+    got = spark_codec.decode_lines_agg(_frames_df(spark, frames)).collect()[0]
+    want = [_quantized(f) for f in frames]
+    assert tuple(got) == (n, sum(len(f.coords) for f in want),
+                          sum(int(f.coords[0]) for f in want))
 
 
-def test_corrupt_frame_raises(jvm):
-    # truncated payload (mid-varint) must fail the task on the JVM path
-    # exactly as the Arrow path does
-    ids = np.array([1], dtype=np.int64)
-    frames = spark_codec.encode_points_kernel(
-        ids, np.array([10.0]), np.array([20.0]))
-    buf = bytes(frames[0].as_py())[:-1]  # drop the final varint byte
-    df = _frames_df(jvm, pa.array([buf], type=pa.binary()))
+def test_corrupt_frame_raises(spark):
+    # truncated payload (mid-varint) must fail the task
+    buf = _point_frames([1], [10.0], [20.0])[0][:-1]  # drop the final byte
     with pytest.raises(Exception):
-        jvm_codec.decode_points_agg_jvm(df).collect()
+        spark_codec.decode_points_agg(_frames_df(spark, [buf])).collect()
     with pytest.raises(Exception):
-        spark_codec.decode_points_agg(df).collect()
+        spark_codec.decode_points(_frames_df(spark, [buf])).collect()
 
 
-def test_point_encode_byte_parity(jvm):
-    """gb_point_enc frames are byte-identical to the Arrow kernel's,
+def test_point_encode_byte_parity(spark):
+    """encode_points frames are byte-identical to the reference encoder's,
     including negative coords, the 1e-7 lattice, and large ids."""
     rng = np.random.default_rng(21)
     n = 4000
@@ -106,122 +127,90 @@ def test_point_encode_byte_parity(jvm):
                           np.array([0, 1, 2**40, 2**62], dtype=np.int64)])
     lon = rng.uniform(-180, 180, n)
     lat = rng.uniform(-90, 90, n)
-    df = jvm.createDataFrame(
-        pa.table({"doc_id": ids, "lon": lon, "lat": lat}).to_pandas())
-    a = spark_codec.encode_points(df).orderBy("doc_id").collect()
-    b = jvm_codec.encode_points_jvm(df).orderBy("doc_id").collect()
-    assert [bytes(r.geobuf) for r in a] == [bytes(r.geobuf) for r in b]
+    df = spark.createDataFrame(pd.DataFrame({"doc_id": ids, "lon": lon, "lat": lat}))
+    got = [bytes(r.geobuf) for r in spark_codec.encode_points(df).collect()]
+    assert sorted(got) == sorted(_point_frames(ids, lon, lat))  # ids repeat
 
 
 def _poly_fixture(rng, n):
-    """Random multi-ring polygons: (rows, ids, flat, ring_nv, rings_per_feat)."""
-    rows, flat, ring_nv, rpf = [], [], [], []
+    """Random multi-ring polygons: rows of (id, flat coords, ring_nv)."""
+    rows = []
     for i in range(n):
-        r = int(rng.integers(1, 4))
-        nvs = [int(rng.integers(3, 12)) for _ in range(r)]
-        c = rng.uniform(-180, 180, sum(nvs) * 2)
-        rows.append((i * 7 + 1, c.tolist(), nvs))
-        flat.append(c)
-        ring_nv.extend(nvs)
-        rpf.append(r)
-    return (rows, np.array([r[0] for r in rows], dtype=np.int64),
-            np.concatenate(flat), np.array(ring_nv, dtype=np.int64),
-            np.array(rpf, dtype=np.int64))
+        nvs = [int(rng.integers(3, 12)) for _ in range(int(rng.integers(1, 4)))]
+        rows.append((i * 7 + 1, rng.uniform(-180, 180, sum(nvs) * 2).tolist(), nvs))
+    return rows
 
 
-def test_poly_encode_byte_parity(jvm):
-    """gb_poly_enc frames are byte-identical to encode_rings_kernel
-    (Polygon, dim 2), across ring counts 1-3 and negative coords."""
-    import pandas as pd
-    rng = np.random.default_rng(41)
-    rows, ids, flat, ring_nv, rpf = _poly_fixture(rng, 400)
-    df = jvm.createDataFrame(
+def test_poly_encode_byte_parity(spark):
+    """encode_polygons frames are byte-identical to the reference
+    encoder's (Polygon, dim 2), across ring counts 1-3 and negative
+    coords."""
+    rows = _poly_fixture(np.random.default_rng(41), 400)
+    df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["poly_id", "coords", "ring_lens"]))
-    a = spark_codec.encode_polygons(df).orderBy("poly_id").collect()
-    b = jvm_codec.encode_polygons_jvm(df).orderBy("poly_id").collect()
-    assert [bytes(r.geobuf) for r in a] == [bytes(r.geobuf) for r in b]
+    got = [bytes(r.geobuf)
+           for r in spark_codec.encode_polygons(df).orderBy("poly_id").collect()]
+    assert got == [_poly_frame(*r) for r in rows]
 
 
-def test_poly_decode_parity(jvm):
-    """gb_poly_dec matches decode_rings_kernel: same ring_lens, same
-    absolute quantized coords with per-ring delta reset."""
-    rng = np.random.default_rng(42)
-    _, ids, flat, ring_nv, rpf = _poly_fixture(rng, 300)
-    df = _frames_df(
-        jvm, spark_codec.encode_rings_kernel(ids, flat, ring_nv, rpf))
-    a = {r["poly_id"]: (list(r["coords_q"]), list(r["ring_lens"]))
-         for r in spark_codec.decode_polygons(df).collect()}
-    b = {r["poly_id"]: (list(r["coords_q"]), list(r["ring_lens"]))
-         for r in jvm_codec.decode_polygons_jvm(df).collect()}
-    assert a == b
+def test_poly_decode_parity(spark):
+    """decode_polygons matches the reference decoder: same ring_lens,
+    same absolute quantized coords with per-ring delta reset."""
+    frames = [_poly_frame(*r) for r in _poly_fixture(np.random.default_rng(42), 300)]
+    got = {r["poly_id"]: (list(r["coords_q"]), list(r["ring_lens"]))
+           for r in spark_codec.decode_polygons(_frames_df(spark, frames)).collect()}
+    want = {f.id: (f.coords.tolist(), f.ring_lens.tolist())
+            for f in map(_quantized, frames)}
+    assert got == want
 
 
-def test_poly_agg_and_corrupt(jvm):
-    rng = np.random.default_rng(43)
-    _, ids, flat, ring_nv, rpf = _poly_fixture(rng, 500)
-    frames = spark_codec.encode_rings_kernel(ids, flat, ring_nv, rpf)
-    df = _frames_df(jvm, frames)
-    row = jvm_codec.decode_polygons_agg_jvm(df).collect()[0]
+def test_poly_agg_and_corrupt(spark):
+    rows = _poly_fixture(np.random.default_rng(43), 500)
+    df = _frames_df(spark, [_poly_frame(*r) for r in rows])
+    row = spark_codec.decode_polygons_agg(df).collect()[0]
     assert row["n"] == 500
-    assert row["sum_id"] == int(ids.sum())
-    assert row["sum_rings"] == int(rpf.sum())
-    assert row["sum_coord_tokens"] == int(ring_nv.sum()) * 2
+    assert row["sum_id"] == sum(r[0] for r in rows)
+    assert row["sum_rings"] == sum(len(r[2]) for r in rows)
+    assert row["sum_coord_tokens"] == sum(len(r[1]) for r in rows)
     # a ring count token overrunning the payload must fail the task. Use
     # lattice-small coords (quantized deltas are single-byte varints, so
     # glen < 128 and every byte offset is fixed): frame = 0x08 id | 0x18 3
     # | 0x22 glen | count deltas... — corrupt the count token at gi+2.
-    tiny = spark_codec.encode_rings_kernel(
-        np.array([5], dtype=np.int64),
-        np.array([1e-7, 2e-7, 3e-7, 1e-7, 2e-7, 4e-7]),
-        np.array([3], dtype=np.int64), np.array([1], dtype=np.int64))
-    buf = bytearray(bytes(tiny[0].as_py()))
+    buf = bytearray(_poly_frame(5, [1e-7, 2e-7, 3e-7, 1e-7, 2e-7, 4e-7], [3]))
     gi = buf.index(0x22)
     assert buf[gi + 1] < 0x80 and buf[gi + 2] == 6  # glen 1 byte; count 3*2
     buf[gi + 2] = 0x7E  # claims 126 tokens; payload has 6
-    dfc = _frames_df(jvm, pa.array([bytes(buf)], type=pa.binary()))
     with pytest.raises(Exception):
-        jvm_codec.decode_polygons_jvm(dfc).collect()
+        spark_codec.decode_polygons(_frames_df(spark, [bytes(buf)])).collect()
 
 
-def test_line_encode_byte_parity_and_roundtrip(jvm):
-    """gb_line_enc frames are byte-identical to encode_lines_kernel, and
-    the JVM decode of the JVM encode recovers the quantized vertices."""
-    import pandas as pd
+def test_line_encode_byte_parity_and_roundtrip(spark):
+    """encode_lines frames are byte-identical to the reference encoder's,
+    and decode_lines of them recovers the quantized vertices."""
     rng = np.random.default_rng(22)
-    n = 500
-    rows = []
-    for i in range(n):
-        nv = int(rng.integers(2, 60))
-        c = rng.uniform(-180, 180, nv * 2)
-        rows.append((i, c.tolist()))
-    df = jvm.createDataFrame(pd.DataFrame(rows, columns=["line_id", "coords"]))
-    a = spark_codec.encode_lines(df).orderBy("line_id").collect()
-    b = jvm_codec.encode_lines_jvm(df).orderBy("line_id").collect()
-    assert [bytes(r.geobuf) for r in a] == [bytes(r.geobuf) for r in b]
-    enc = jvm_codec.encode_lines_jvm(df)
+    rows = [(i, rng.uniform(-180, 180, int(rng.integers(2, 60)) * 2).tolist())
+            for i in range(500)]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["line_id", "coords"]))
+    enc = spark_codec.encode_lines(df)
+    got = [bytes(r.geobuf) for r in enc.orderBy("line_id").collect()]
+    assert got == [_line_frame(i, c) for i, c in rows]
     dec = {r.line_id: list(r.coords_q)
-           for r in jvm_codec.decode_lines_jvm(enc).collect()}
-    from geobuf_spark.codec import core
+           for r in spark_codec.decode_lines(enc).collect()}
     for i, c in rows:
         assert dec[i] == core.quantize_vec(np.array(c)).tolist()
 
 
-def test_frames_split_parity(jvm, tmp_path):
+def test_frames_split_parity(spark, tmp_path):
     """gb_frames (JVM stream splitter) vs core.read_frames byte-parity on
     a framed multi-feature stream, and the full many-files read plan
     (read_geobuf_files_jvm) vs the python mapInArrow reader."""
-    from pyspark.sql import functions as F
-
-    from geobuf_spark.codec import core
-
     ids = np.arange(50, dtype=np.int64)
-    enc = spark_codec.encode_points_kernel(
-        ids, ids * 0.001, ids * -0.002)
-    frames = [bytes(enc[i].as_py()) for i in range(len(ids))]
+    frames = _point_frames(ids, ids * 0.001, ids * -0.002)
     stream = core.write_frames(frames)
 
     # splitter parity on one stream
-    got = (jvm.createDataFrame([(stream,)], "content binary")
+    jvm_codec.register(spark)
+    got = (spark.createDataFrame([(stream,)], "content binary")
            .select(F.posexplode(F.expr("gb_frames(content)")))
            .orderBy("pos").collect())
     assert [bytes(r[1]) for r in got] == frames
@@ -233,42 +222,40 @@ def test_frames_split_parity(jvm, tmp_path):
     for i in range(4):
         part = frames[i * 12:(i + 1) * 12]
         (d / f"part-{i}.geobuf").write_bytes(core.write_frames(part))
-    jdf = jvm_codec.read_geobuf_files_jvm(jvm, str(d))
+    jdf = jvm_codec.read_geobuf_files_jvm(spark, str(d))
     from geobuf_spark.sources import geobuf_file
-    pdf = geobuf_file.read_geobuf(jvm, str(d))
+    pdf = geobuf_file.read_geobuf(spark, str(d))
     jb = sorted(bytes(r["geobuf"]) for r in jdf.collect())
     pb = sorted(bytes(r["geobuf"]) for r in pdf.collect())
     assert jb == pb == sorted(frames[:48])
 
     # truncated stream fails loudly
     with pytest.raises(Exception):
-        (jvm.createDataFrame([(stream[:-1],)], "content binary")
+        (spark.createDataFrame([(stream[:-1],)], "content binary")
          .select(F.explode(F.expr("gb_frames(content)"))).collect())
 
 
-def test_roundtrip_points_jvm_parity(jvm):
-    """gb_point(gb_point_enc(...)) codegen round-trip returns the same
-    quantized lattice values as the Arrow-kernel round-trip."""
-    from geobuf_spark.codec import jvm_codec as jc
+def test_roundtrip_points_parity(spark):
+    """gb_point(gb_point_enc(...)) codegen round-trip returns the lattice
+    values the reference encoder → decoder round-trip gives."""
     from geobuf_spark.sources import pages
 
-    p = (pages.with_minted_geometry(pages.pages(jvm, 500))
+    p = (pages.with_minted_geometry(pages.pages(spark, 500))
          .select("page_id", "lon", "lat"))
-    a = sorted(tuple(r) for r in
-               spark_codec.roundtrip_points(p, id_col="page_id").collect())
-    b = sorted(tuple(r) for r in
-               jc.roundtrip_points_jvm(p, id_col="page_id").collect())
-    assert a == b
+    got = sorted(tuple(r) for r in
+                 spark_codec.roundtrip_points(p, id_col="page_id").collect())
+    src = p.collect()
+    frames = _point_frames([r.page_id for r in src], [r.lon for r in src],
+                           [r.lat for r in src])
+    want = sorted((f.id, *f.coords.tolist()) for f in map(_quantized, frames))
+    assert got == want
 
 
-def test_point_enc_tie_lattice_parity(jvm):
-    """Cross-engine encode parity under adversarial inputs: uniform
-    floats mixed with exact half-ulp tie candidates on the 1e-7 lattice
-    (the rounding boundary where two implementations of go_round7 would
-    first diverge). 6k frames, byte-for-byte."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
+def test_point_enc_tie_lattice_parity(spark):
+    """Encode parity under adversarial inputs: uniform floats mixed with
+    exact half-ulp tie candidates on the 1e-7 lattice (the rounding
+    boundary where two implementations would first diverge). 6k frames,
+    byte-for-byte against the reference encoder."""
     rng = np.random.default_rng(7)
     n = 6000
     ids = rng.integers(0, 1 << 40, n)
@@ -282,50 +269,41 @@ def test_point_enc_tie_lattice_parity(jvm):
         (rng.integers(-900_000_000, 900_000_000, n // 4) + 0.5) / 1e7,
         rng.integers(-900_000_000, 900_000_000, n - n // 2 - n // 4) / 1e7,
     ])
-    py = [bytes(f.as_py()) for f in spark_codec.encode_points_kernel(
-        ids.astype(np.int64), lon, lat)]
-    df = jvm.createDataFrame(pd.DataFrame(
+    assert len(set(ids.tolist())) == n  # ids key the comparison
+    df = spark.createDataFrame(pd.DataFrame(
         {"id": ids.astype("int64"), "lon": lon, "lat": lat}))
-    jv = [bytes(r[0]) for r in
-          df.select(F.expr("gb_point_enc(id, lon, lat)")).collect()]
-    assert py == jv
+    got = {r.id: bytes(r.geobuf)
+           for r in spark_codec.encode_points(df, id_col="id").collect()}
+    assert got == dict(zip(ids.tolist(), _point_frames(ids, lon, lat)))
 
 
-def test_line_poly_enc_random_parity(jvm):
-    """Random lines and two-ring polygons: python batch kernels vs JVM
-    encoders, byte-for-byte (hypothesis-free fixed seeds — each case is
-    one Spark job, so a handful of seeded draws beats per-example jobs)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
+def test_line_poly_enc_random_parity(spark):
+    """Random lines and two-ring polygons: JVM encoders vs the reference
+    encoder, byte-for-byte (hypothesis-free fixed seeds — each case is one
+    Spark job, so a handful of seeded draws beats per-example jobs)."""
     for seed in (1, 2, 3):
         rng = np.random.default_rng(seed)
         n = 300
         ids = np.arange(n, dtype=np.int64)
         nv = rng.integers(2, 30, n)
-        flat = []
-        for k in nv:
-            flat.append(np.round(rng.uniform(-180, 180, int(k) * 2), 7))
-        coords = [c.tolist() for c in flat]
-        py = [bytes(f.as_py()) for f in spark_codec.encode_lines_kernel(
-            ids, np.concatenate(flat), nv.astype(np.int64), dim=2)]
-        df = jvm.createDataFrame(pd.DataFrame(
-            {"id": ids, "coords": coords}))
-        jv = [bytes(r[0]) for r in
-              df.select(F.expr("gb_line_enc(id, coords)")).collect()]
-        assert py == jv, f"line mismatch seed {seed}"
+        flat = [np.round(rng.uniform(-180, 180, int(k) * 2), 7) for k in nv]
+        df = spark.createDataFrame(pd.DataFrame(
+            {"line_id": ids, "coords": [c.tolist() for c in flat]}))
+        got = [bytes(r.geobuf) for r in
+               spark_codec.encode_lines(df).orderBy("line_id").collect()]
+        assert got == [_line_frame(i, c) for i, c in zip(ids, flat)], \
+            f"line mismatch seed {seed}"
 
         # two-ring polygons over the same draws
         nv2 = rng.integers(2, 8, n)
         flat2 = [np.round(rng.uniform(-85, 85, int(k) * 2), 7) for k in nv2]
         ring_flat = [np.concatenate([a, b]) for a, b in zip(flat, flat2)]
-        ring_nv = np.stack([nv, nv2], axis=1).astype(np.int64)
-        pyp = [bytes(f.as_py()) for f in spark_codec.encode_rings_kernel(
-            ids, np.concatenate(ring_flat), ring_nv.reshape(-1),
-            np.full(n, 2, dtype=np.int64))]
-        dfp = jvm.createDataFrame(pd.DataFrame({
-            "id": ids, "coords": [c.tolist() for c in ring_flat],
-            "ring_nv": [[int(a), int(b)] for a, b in zip(nv, nv2)]}))
-        jvp = [bytes(r[0]) for r in
-               dfp.select(F.expr("gb_poly_enc(id, coords, ring_nv)")).collect()]
-        assert pyp == jvp, f"poly mismatch seed {seed}"
+        ring_nv = [[int(a), int(b)] for a, b in zip(nv, nv2)]
+        dfp = spark.createDataFrame(pd.DataFrame({
+            "poly_id": ids, "coords": [c.tolist() for c in ring_flat],
+            "ring_lens": ring_nv}))
+        got = [bytes(r.geobuf) for r in
+               spark_codec.encode_polygons(dfp).orderBy("poly_id").collect()]
+        assert got == [_poly_frame(i, c, r)
+                       for i, c, r in zip(ids, ring_flat, ring_nv)], \
+            f"poly mismatch seed {seed}"

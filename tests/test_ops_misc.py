@@ -2,6 +2,7 @@
 similarity recall, streaming parity."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,6 +11,8 @@ from geobuf_spark.operators import multimodal, similarity
 from geobuf_spark.ops import lineage
 from geobuf_spark.sources import geobuf_file, pages
 from geobuf_spark.streaming import windows as W
+
+COUNTY = "/root/reference/test_data/county.geobuf"
 
 
 # --- lineage / checkpoint ---------------------------------------------------
@@ -363,23 +366,43 @@ def test_commit_output_preserves_old_on_swap(spark, tmp_path):
     assert not any(d.startswith(".old-") for d in os.listdir(out))
 
 
-def test_fast_vs_generic_decode_parity(spark):
-    """decode_features_fast (vectorized geometry + props-only row parse)
-    must reproduce the generic per-feature decoder on the reference's own
-    county file — ids, structure, props byte-for-byte; coords on the same
-    1e-7 lattice."""
-    path = "/root/reference/test_data/county.geobuf"
-    fast = {r.id: r for r in geobuf_file.decoded_features(spark, path, fast=True).collect()}
-    gen = {r.id: r for r in geobuf_file.decoded_features(spark, path, fast=False).collect()}
-    assert set(fast) == set(gen) and len(fast) == 3304
+@pytest.mark.parametrize("source", [
+    "fixture",
+    pytest.param("county", marks=pytest.mark.skipif(
+        not os.path.exists(COUNTY), reason="reference corpus not present")),
+])
+def test_fast_vs_generic_decode_parity(spark, tmp_path, source):
+    """decoded_features (vectorized geometry + props-only row parse) must
+    reproduce the per-feature reference decoder, core.decode_feature, on
+    the same frames — ids, structure, props byte-for-byte; coords on the
+    same 1e-7 lattice. Sources: the reference's own county file, and the
+    committed county-shaped fixture (bbox-less, property-bearing
+    multi-ring polygons) written to a file."""
     import numpy as np
+    from geobuf_fixtures import county_polygons, strip_bbox
+
+    from geobuf_spark.codec import core
+
+    if source == "county":
+        path, n = COUNTY, 3304
+    else:
+        feats = county_polygons()
+        path, n = str(tmp_path / "county_shaped.geobuf"), len(feats)
+        with open(path, "wb") as f:
+            f.write(core.write_frames(
+                [strip_bbox(core.encode_feature(x)) for x in feats]))
+    with open(path, "rb") as f:
+        gen = {g.id: g for g in map(core.decode_feature, core.read_frames(f.read()))}
+    fast = {r.id: r for r in geobuf_file.decoded_features(spark, path).collect()}
+    assert set(fast) == set(gen) and len(fast) == n
     for fid, fr in fast.items():
         gr = gen[fid]
         assert (fr.geom_type, fr.dim) == (gr.geom_type, gr.dim)
-        assert fr.ring_lens == gr.ring_lens and fr.part_rings == gr.part_rings
-        assert fr.props_json == gr.props_json
-        d = np.abs(np.asarray(fr.coords) - np.asarray(gr.coords))
-        # generic path carries the reference's float-accumulation error;
+        assert fr.ring_lens == gr.ring_lens.tolist()
+        assert fr.part_rings == gr.part_rings.tolist()
+        assert fr.props_json == json.dumps(gr.properties, sort_keys=True)
+        d = np.abs(np.asarray(fr.coords) - gr.coords)
+        # the reference decoder carries its float-accumulation error;
         # both land on the 1e-7 lattice, so any diff is one rounding step
         assert d.max() <= 1.01e-7, (fid, d.max())
 

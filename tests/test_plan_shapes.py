@@ -18,6 +18,32 @@ def _executed_plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def test_codec_plans_stay_jvm(spark):
+    """The point, line and polygon codec runs as JVM UDFs inside codegen:
+    no Python evaluation node in the flagship entry(), the codec registry
+    queries, or the fused point round trip."""
+    import __spark_entry__ as em
+
+    from geobuf_spark.codec import spark_codec
+    from geobuf_spark.sources import pages
+
+    sf = "/root/testdata/sf0.001"
+    q = em.queries()
+    p = (pages.with_minted_geometry(pages.pages(spark, 500))
+         .select("page_id", "lon", "lat"))
+    frames = {
+        "entry": em.entry(spark),
+        **{n: q[n](spark, sf)
+           for n in ("geobuf_roundtrip", "polygon_roundtrip", "feature_meta")},
+        "roundtrip_points": spark_codec.roundtrip_points(p, id_col="page_id"),
+    }
+    for name, df in frames.items():
+        plan = _executed_plan(df)
+        assert "gb_po" in plan, name  # gb_point*/gb_poly*: the codec ran
+        for marker in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+            assert marker not in plan, (name, marker)
+
+
 def test_tpch_fact_table_never_broadcast(spark):
     """Join-strategy invariant for the TPC-H surface: lineitem (the fact
     table) must never appear on the build side of a BroadcastHashJoin —

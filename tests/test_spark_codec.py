@@ -1,19 +1,24 @@
 """Spark-level geobuf codec: encode/decode round trips on DataFrames."""
 
+import pathlib
+
 import numpy as np
 import pyarrow as pa
 import pytest
+from geobuf_fixtures import county_polygons, strip_bbox
 from pyspark.sql import functions as F
 
 from geobuf_spark.codec import core
 from geobuf_spark.codec import spark_codec as sc
 from geobuf_spark.sources import minted
 
+COUNTY = pathlib.Path("/root/reference/test_data/county.geobuf")
+
 
 def test_points_roundtrip_df(spark, sf_small):
     pts = minted.minted_points(spark, sf_small)
     enc = sc.encode_points(pts)
-    dec = sc.decode_points(enc, quantized=True)
+    dec = sc.decode_points(enc)
     got = {(r.id, r.lon_q, r.lat_q) for r in dec.collect()}
     want = {
         (r.doc_id, core.convert_pt(r.lon), core.convert_pt(r.lat))
@@ -51,7 +56,7 @@ def test_generic_roundtrip_df(spark):
     ]
     df = spark.createDataFrame(feats, schema=sc.GEOM_SCHEMA)
     enc = sc.encode_features_generic(df)
-    dec = sc.decode_features_generic(enc)
+    dec = sc.decode_features_fast(enc)
     got = {r.id: r for r in dec.collect()}
     for fid, gt, dim, coords, rl, pr, props in feats:
         r = got[fid]
@@ -61,12 +66,12 @@ def test_generic_roundtrip_df(spark):
         assert json.loads(r.props_json) == json.loads(props)
 
 
-def test_kernel_empty_batch():
-    arr = sc.encode_points_kernel(
-        np.empty(0, np.int64), np.empty(0, np.float64), np.empty(0, np.float64)
-    )
-    ids, qx, qy = sc.decode_points_kernel(pa.array([], type=pa.binary()))
-    assert len(arr) == 0 and len(ids) == 0 and len(qx) == 0 and len(qy) == 0
+def test_kernel_empty_batch(spark):
+    empty = spark.createDataFrame([], "doc_id bigint, lon double, lat double")
+    enc = sc.encode_points(empty)
+    assert enc.count() == 0 and sc.decode_points(enc).count() == 0
+    assert sc.roundtrip_points(empty).count() == 0
+    assert sc.decode_points_agg(enc).first().n == 0
 
 
 # ---------------------------------------------------------------------------
@@ -210,17 +215,12 @@ def test_frame_keys_and_bbox_wire_level(spark, sf_small):
     enc.unpersist()
 
 
-def test_frame_bbox_missing_field():
+@pytest.mark.skipif(not COUNTY.exists(), reason="reference corpus not present")
+def test_frame_bbox_missing_field_county():
     """county.geobuf was written by an older encoder with NO bbox field —
     the wire-level reader must yield not-found, not garbage."""
-    import numpy as np
-    import pyarrow as pa
-
-    from geobuf_spark.codec.core import read_frames
-
-    data = open("/root/reference/test_data/county.geobuf", "rb").read()
     frames = []
-    for i, fr in enumerate(read_frames(data)):
+    for i, fr in enumerate(core.read_frames(COUNTY.read_bytes())):
         frames.append(fr)
         if i >= 50:
             break
@@ -232,9 +232,30 @@ def test_frame_bbox_missing_field():
     assert "AREA" in set(keys) and "COLORKEY" in set(keys)
 
 
-def test_decode_points_any_with_props(spark, sf_small):
-    """props-bearing point frames decode vectorized: coords equal the
-    source lattice, ids preserved — no 14-token layout assumption."""
+def test_frame_bbox_missing_field():
+    """Property-bearing frames without a bbox field (the older encoder's
+    layout, as in county.geobuf): the wire-level bbox reader yields
+    not-found instead of garbage, the keys stay readable, and the same
+    frames with their bbox report it exactly."""
+    feats = county_polygons()
+    with_bb = [core.encode_feature(f) for f in feats]
+    arr = pa.array([strip_bbox(fr) for fr in with_bb], type=pa.binary())
+    found, *_ = sc.frame_bbox_kernel(arr)
+    assert not found.any()
+    rows, keys = sc.frame_keys_kernel(arr)
+    assert sorted(zip(rows.tolist(), keys)) == [
+        (i, k) for i in range(len(feats)) for k in ("AREA", "COLORKEY", "index")]
+
+    found, w, s_, e_, n_ = sc.frame_bbox_kernel(pa.array(with_bb, type=pa.binary()))
+    assert found.all()
+    for i, f in enumerate(feats):
+        want = [core.convert_pt(c) for c in core.geom_bbox(f)]
+        assert [w[i], s_[i], e_[i], n_[i]] == want, i
+
+
+def test_decode_points_with_props(spark, sf_small):
+    """props-bearing point frames decode exactly: coords equal the source
+    lattice, ids preserved — no fixed token layout assumption."""
     import numpy as np
 
     from geobuf_spark.sources import minted
@@ -243,41 +264,41 @@ def test_decode_points_any_with_props(spark, sf_small):
     pts = minted.minted_points(spark, sf_small).join(
         docs.select("doc_id", "lang", "n_chars"), "doc_id")
     enc = sc.encode_points_with_props(pts, props=["lang", "n_chars"])
-    frames = pa.array([bytes(r.geobuf) for r in enc.collect()], type=pa.binary())
-    ids, qx, qy = sc.decode_points_any_kernel(frames)
+    got = {r.id: (r.lon_q, r.lat_q) for r in sc.decode_points(enc).collect()}
     src = {r.doc_id: (r.lon, r.lat) for r in pts.collect()}
-    for i in range(len(ids)):
-        lo, la = src[int(ids[i])]
-        assert qx[i] == core.quantize_vec(np.array([lo]))[0]
-        assert qy[i] == core.quantize_vec(np.array([la]))[0]
-    # also works on prop-less frames (same results as the fixed-layout path)
-    enc2 = sc.encode_points_kernel(np.arange(10), np.linspace(-5, 5, 10), np.linspace(2, 3, 10))
-    a1 = sc.decode_points_any_kernel(enc2)
-    a2 = sc.decode_points_kernel(enc2)
-    assert np.array_equal(a1[1], a2[1]) and np.array_equal(a1[2], a2[2])
+    assert got == {k: (core.convert_pt(lo), core.convert_pt(la))
+                   for k, (lo, la) in src.items()}
+    # the reference decoder reads the same frames the same way
+    for r in enc.limit(20).collect():
+        f = core.decode_feature(bytes(r.geobuf), quantized=True)
+        assert (f.id, *f.coords.tolist()) == (r.doc_id, *got[r.doc_id])
 
 
-def test_review_regressions():
+def test_review_regressions(spark):
     """Pinned repros from the round-1 codec review."""
     import numpy as np
 
-    # (a) mixed-batch dispatch on props-bearing frames
+    # (a) geom-code field walk on props-bearing frames
     flat_l = np.frombuffer(b"ende", dtype=np.uint8); offs_l = np.array([0, 2, 4])
     arr = sc.encode_points_props_kernel(
         np.array([1, 2]), np.array([1.0, 2.0]), np.array([3.0, 4.0]),
         [("lang", "str", (flat_l, offs_l))])
-    assert sc._frame_geom_codes(arr).tolist() == [1, 1]
+    assert sc._tokenize_geometry(arr)[2].tolist() == [1, 1]
     # (b) id-less frames: lazy read still finds the property
     f = core.Feature.from_geojson("Point", [1.0, 2.0], properties={"lang": "en"})
     a2 = pa.array([core.encode_feature(f)], type=pa.binary())
     _, kinds, strs, _, _ = sc.lazy_prop_kernel(a2, "lang")
     assert kinds.tolist() == [1] and strs == ["en"]
     # (c) zero-vertex / zero-ring features rejected loudly
-    with pytest.raises(ValueError, match="zero vertices"):
-        sc.encode_lines_kernel(np.array([1, 2]), np.array([0.1, 0.2]), np.array([1, 0]))
-    with pytest.raises(ValueError, match="empty ring"):
-        sc.encode_rings_kernel(np.array([1]), np.empty(0), np.empty(0, np.int64),
-                               np.array([0]))
+    lines = spark.createDataFrame([(1, [0.1, 0.2]), (2, [])],
+                                  "line_id bigint, coords array<double>")
+    with pytest.raises(Exception, match="non-empty"):
+        sc.encode_lines(lines).collect()
+    polys = spark.createDataFrame(
+        [(1, [0.0, 0.0, 1.0, 0.0, 1.0, 1.0], [3, 0])],
+        "poly_id bigint, coords array<double>, ring_lens array<int>")
+    with pytest.raises(Exception, match="empty ring"):
+        sc.encode_polygons(polys).collect()
 
 
 def test_s2_parent_exact_at_high_levels(spark):
@@ -367,15 +388,15 @@ def test_encode_props_rejects_nulls(spark):
 
 
 def test_fused_decode_agg_matches_materializing_path(spark):
-    """decode_points_agg / decode_lines_agg (single-Arrow-pass partials)
-    must equal decode + JVM aggregate exactly."""
+    """decode_points_agg / decode_lines_agg (decode fused into the
+    aggregate) must equal decode + aggregate exactly."""
     import numpy as np
 
     from geobuf_spark.sources import minted
     p = minted.minted_points(spark, "/root/testdata/sf0.001") \
         .select(F.col("doc_id"), "lon", "lat")
     enc = sc.encode_points(p)
-    fused = sc.decode_points_agg(enc, parts=4).collect()[0]
+    fused = sc.decode_points_agg(enc).collect()[0]
     d = sc.decode_points(enc)
     full = d.agg(F.count("*"), F.sum("id"), F.sum("lon_q"), F.sum("lat_q")).collect()[0]
     assert list(fused) == list(full)
@@ -384,17 +405,19 @@ def test_fused_decode_agg_matches_materializing_path(spark):
     n = 500
     nv = rng.integers(2, 12, n).astype(np.int64)
     c = rng.uniform(-170, 170, int(nv.sum()) * 2)
-    arr = sc.encode_lines_kernel(np.arange(n), c, nv)
-    df = spark.createDataFrame([(bytearray(arr[i].as_py()),) for i in range(n)],
-                               "geobuf binary")
-    fusedl = sc.decode_lines_agg(df, parts=2).collect()[0]
+    starts = np.concatenate(([0], np.cumsum(nv)[:-1]))
+    frames = [core.encode_feature(core.Feature.from_geojson(
+        "LineString", c[2 * s:2 * (s + k)].reshape(-1, 2).tolist(), id=i))
+        for i, (s, k) in enumerate(zip(starts, nv))]
+    df = spark.createDataFrame([(bytearray(f),) for f in frames], "geobuf binary")
+    fusedl = sc.decode_lines_agg(df).collect()[0]
     dl = sc.decode_lines(df)
     fulll = dl.agg(F.count("*"), F.sum(F.size("coords_q")),
                    F.sum(F.element_at("coords_q", 1))).collect()[0]
     assert list(fusedl) == list(fulll)
 
 
-def test_truncated_frames_raise_not_corrupt():
+def test_truncated_frames_raise_not_corrupt(spark):
     """A frame whose geometry length overruns its boundary must raise —
     the gather would otherwise read the NEXT frame's bytes (review r2)."""
     import numpy as np
@@ -406,10 +429,12 @@ def test_truncated_frames_raise_not_corrupt():
     # geometry payload spans bytes 6..16 in this frame — cut inside it
     # (cutting only the trailing bbox leaves geometry decodable, which is
     # correct lazy-read behavior, not corruption)
+    def frames(*fs):
+        return spark.createDataFrame([(bytearray(x),) for x in fs], "geobuf binary")
+
     for cut in (12, 8, 5):
-        arr = pa.array([f, f[:cut]], type=pa.binary())
-        with pytest.raises(ValueError, match="truncated or corrupt"):
-            sc.decode_points_any_kernel(arr)
+        with pytest.raises(Exception, match="truncated or corrupt"):
+            sc.decode_points(frames(f, f[:cut])).collect()
     # intact frames still decode
-    ids, qx, qy = sc.decode_points_any_kernel(pa.array([f, f], type=pa.binary()))
-    assert ids.tolist() == [5, 5] and qx.tolist() == [10**9] * 2
+    rows = sc.decode_points(frames(f, f)).collect()
+    assert [(r.id, r.lon_q) for r in rows] == [(5, 10**9)] * 2

@@ -99,29 +99,6 @@ def evict(root: str) -> int:
     return total
 
 
-def warm_workers(spark, cores: int) -> None:
-    """Fork + import the full python-worker pool right before a timed trial.
-
-    Spark's PythonWorkerFactory reaps idle workers between trials, and a
-    re-fork is a cores-wide numpy/pyarrow import storm that runs *through
-    the throttled device* (~20 s at 100 MB/s) — measured to dominate every
-    geobuf trial while the pure-JVM JSON path never pays it. On a real
-    cluster executors (and their worker pools) live for hours, so the
-    storm is a sandbox artifact; re-warming the pool immediately before
-    each trial excludes it from the timed window without touching the
-    evicted corpus files."""
-
-    def _noop(batches):
-        # preload the decode kernel's import graph (numpy/pyarrow) so the
-        # first real trial doesn't stream site-packages through the throttle
-        import geobuf_spark.codec.spark_codec  # noqa: F401
-
-        for b in batches:
-            yield b
-
-    spark.range(cores * 4, numPartitions=cores).mapInArrow(_noop, "id long").count()
-
-
 def raw_read(root: str, bufsize: int = 1 << 20) -> tuple[float, int]:
     """Sequential read of every file (the throttle/eviction control)."""
     t0 = time.time()
@@ -167,16 +144,10 @@ def main() -> None:
         # ~3 scan partitions, serializing decode onto 3 cores — a corpus-
         # size artifact (a 100 TB table has thousands of row groups). 8 MB
         # bins ≈ one ~5 MB part file per partition on both sides.
-        # 5k-row Arrow batches: blkio's token bucket banks no credit while a
-        # scan task is blocked handing a batch to python, so 50k-row (≈10 MB)
-        # handoffs turn the read stream bursty and starve it to ~8 MB/s of a
-        # 100 MB/s budget (measured). Small batches keep reads continuous —
-        # the role column-chunk prefetch plays in real object-store readers.
         spark = get_spark(
             "cold_scan", cores=args.cores, shuffle_partitions=args.cores,
             extra={"spark.sql.files.maxPartitionBytes": "8m",
-                   "spark.sql.files.openCostInBytes": "1m",
-                   "spark.sql.execution.arrow.maxRecordsPerBatch": "5000"})
+                   "spark.sql.files.openCostInBytes": "1m"})
         try:
             _run(spark, args, dev)
         finally:
@@ -200,11 +171,8 @@ def _run(spark, args, dev: str) -> None:
         .repartition(args.cores).write.mode("overwrite").parquet(js_dir)
     os.sync()  # fadvise can't evict dirty pages
 
-    n_parts = max(16, args.cores // 2)
-
     def geobuf_scan():
-        return spark_codec.decode_lines_agg(
-            spark.read.parquet(gb_dir), parts=n_parts).collect()[0][0]
+        return spark_codec.decode_lines_agg(spark.read.parquet(gb_dir)).collect()[0][0]
 
     def json_scan():
         parsed = spark.read.parquet(js_dir).select(
@@ -215,8 +183,8 @@ def _run(spark, args, dev: str) -> None:
     sizes = {side: sum(f.stat().st_size for f in Path(d).rglob("*.parquet"))
              for side, d in [("geobuf", gb_dir), ("json", js_dir)]}
 
-    # warm-path warmup OUTSIDE the throttle: pays python-worker fork,
-    # codegen, and parquet-footer caching so trials measure data IO+decode
+    # warm-path warmup: pays codegen and parquet-footer caching so trials
+    # measure data IO+decode
     assert geobuf_scan() == args.lines and json_scan() == args.lines
 
     out = {"lines": args.lines, "bps_budget": args.bps, "cores": args.cores,
@@ -234,7 +202,6 @@ def _run(spark, args, dev: str) -> None:
     results = {"geobuf_scan": [], "json_scan": []}
     for _ in range(args.trials):
         for name, fn in [("json_scan", json_scan), ("geobuf_scan", geobuf_scan)]:
-            warm_workers(spark, args.cores)
             os.sync()
             evict(gb_dir)
             evict(js_dir)
